@@ -166,10 +166,7 @@ object PostingCodec {
           var j = 0
           while (j < tfs(i)) { acc += r.readInt(); ps(j) = acc; j += 1 }
           ps
-        } else {
-          if (hasPos) { var j = 0; while (j < tfs(i)) { r.read(); j += 1 } } // skip
-          Array.emptyIntArray
-        }
+        } else Array.emptyIntArray // positions are the last stream: nothing to skip to
       out(i) = Posting(docIds(i), tfs(i), positions, if (hasW) ws(i) else 0)
       i += 1
     }

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.analysis.{AddSink, GTokenizer, Normalized}
+import graft.analysis.{AddSink, GTokenizer, Normalized, Normalizer}
 
 /** Per-document tokenize+combine kernel for the index build — the
   * allocation-discipline analogue of Groonga's block-local tmp_lexicon
@@ -175,18 +175,27 @@ object DocCombiner {
       docId: Long,
       content: String
   ): Array[(String, Long, Int, Array[Int])] = {
+    tokenize(tok, comb.scratch, content, comb)(comb.reset)
+    comb.result(docId)
+  }
+
+  /** The build's one tokenization of a document: `start` receives the
+    * normalized text the spans index into, then every token goes to `sink`.
+    * The postings pass ([[docPostings]]) and the norms pass both call it, so
+    * a document's doclen is the sum of tf over its postings.
+    */
+  def tokenize(tok: GTokenizer, scratch: Normalizer.Scratch, content: String, sink: AddSink)(
+      start: Normalized => Unit): Unit =
     if (content.indexOf('\uFFFE') >= 0) {
       // pre-tokenized content: the build cursor honors the U+FFFE
       // delimiter (GTokenizer.tokenizeEnabled) — the rare-doc allocating
       // Token path; the scan costs one indexOf on the common path
       val toks = tok.tokenizeEnabled(content, graft.analysis.TokenizeMode.Add)
-      comb.reset(tok.normalizeWith("", comb.scratch))
-      toks.foreach(t => comb.acceptTerm(t.term, t.pos))
-      return comb.result(docId)
+      start(tok.normalizeWith("", scratch))
+      toks.foreach(t => sink.acceptTerm(t.term, t.pos))
+    } else {
+      val nz = tok.normalizeWith(content, scratch)
+      start(nz)
+      tok.tokenizeAddNormalized(nz, sink)
     }
-    val nz = tok.normalizeWith(content, comb.scratch)
-    comb.reset(nz)
-    tok.tokenizeAddNormalized(nz, comb)
-    comb.result(docId)
-  }
 }

@@ -165,11 +165,11 @@ object IndexBuilder {
     val tokenizerName = cfg.tokenizerName
 
     // ---- stage 1: docs (sha256 invariant, shard assignment) -------------
-    // No tokenization here — doclen is derived from the postings pass
-    // (sum of tf per doc), so content is analyzed exactly once. Sharding is
-    // docId mod nShards: needs no corpus count (single pass over the input)
-    // and round-robins docs across shards, so shard sizes stay balanced
-    // whatever the docId distribution.
+    // No tokenization here — the norms stage counts doclen in its own pass
+    // through DocCombiner.tokenize, the postings pass's tokenization, so it
+    // equals the sum of tf per doc. Sharding is docId mod nShards: needs no corpus count (single
+    // pass over the input) and round-robins docs across shards, so shard
+    // sizes stay balanced whatever the docId distribution.
     // numDocs and the sha digest are accumulated during this same pass (and
     // recorded in the stage marker for resume) — the manifest step never
     // re-reads the docs table.
@@ -279,8 +279,8 @@ object IndexBuilder {
             }
             iter.map { case (docId, content) =>
               counter.n = 0
-              if (content != null)
-                tok.tokenizeAddNormalized(tok.normalizeWith(content, scratch), counter)
+              // the postings pass's tokenization, so doclen = Σ tf
+              if (content != null) DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
               ((docId % nShardsL).toInt, docId, counter.n)
             }
           }

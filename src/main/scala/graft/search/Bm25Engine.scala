@@ -2,7 +2,7 @@ package graft.search
 
 import graft.codec.{PostingCodec, PostingBlock}
 import graft.core.Posting
-import graft.index.SegmentRow
+import graft.index.{IndexReader, SegmentRow}
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -36,13 +36,13 @@ final class TopKAgg(k: Int) extends Aggregator[ScoredDoc, TopKBuf, TopKBuf] {
   * the lock (two threads racing on a cold block decode twice; the first
   * insert wins).
   */
-final class DecodeCache(withPos: Boolean, budgetPostings: Long = 512 * 1024L) {
+final class DecodeCache(budgetPostings: Long = 512 * 1024L) {
   private val m = new java.util.IdentityHashMap[PostingBlock, Array[Posting]]()
   private var retained = 0L
   def get(b: PostingBlock): Array[Posting] = {
     var v = synchronized { m.get(b) }
     if (v == null) {
-      v = PostingCodec.decodeBlock(b, withPos)
+      v = PostingCodec.decodeBlock(b, wantPositions = false)
       synchronized {
         val prev = m.get(b)
         if (prev != null) v = prev
@@ -59,7 +59,8 @@ final class DecodeCache(withPos: Boolean, budgetPostings: Long = 512 * 1024L) {
 /** A per-term posting cursor over one shard with block-level skipping —
   * blocks decode lazily; firstDoc/lastDoc/maxTf headers drive both skips and
   * block-max score bounds (the chunk/dgap role of reference lib/ii.c:2659,
-  * cursor chunk-skipping lib/ii.c:4182-4212).
+  * cursor chunk-skipping lib/ii.c:4182-4212). Scoring reads only docIds
+  * and tf, so blocks decode without their positions.
   *
   * @param termIdx stable index of this term in the query — doc scores are
   *                summed in termIdx order in every execution path so WAND and
@@ -67,13 +68,15 @@ final class DecodeCache(withPos: Boolean, budgetPostings: Long = 512 * 1024L) {
   */
 final class TermCursor(
     val blocks: Array[PostingBlock],
-    withPos: Boolean,
     val termIdx: Int,
     val idfWeight: Double,
     bm25: Bm25,
     cache: DecodeCache = null
 ) {
   private var blockIdx = 0
+  // postings of blocks(blockIdx), decoded on first need: on a block's first
+  // posting the docId is the header's firstDoc, so pivot selection, a
+  // whole-shard skip and an advanceTo landing on a block start decode nothing
   private var decoded: Array[Posting] = _
   private var inBlock = 0
   // suffix max of block maxTf → O(1) remaining-upper-bound
@@ -84,19 +87,20 @@ final class TermCursor(
     while (i >= 0) { m = math.max(m, blocks(i).maxTf); a(i) = m; i -= 1 }
     a
   }
-  if (blocks.nonEmpty) loadBlock()
 
-  private def loadBlock(): Unit = {
-    decoded =
-      if (cache == null) PostingCodec.decodeBlock(blocks(blockIdx), withPos)
-      else cache.get(blocks(blockIdx))
-    inBlock = 0
+  private def block: Array[Posting] = {
+    if (decoded == null)
+      decoded =
+        if (cache == null) PostingCodec.decodeBlock(blocks(blockIdx), wantPositions = false)
+        else cache.get(blocks(blockIdx))
+    decoded
   }
 
+  private def enterBlock(i: Int): Unit = { blockIdx = i; decoded = null; inBlock = 0 }
+
   def exhausted: Boolean = blockIdx >= blocks.length
-  def curDoc: Long = decoded(inBlock).docId
-  def curTf: Int = decoded(inBlock).tf
-  def curPositions: Array[Int] = decoded(inBlock).positions
+  def curDoc: Long = if (inBlock == 0) blocks(blockIdx).firstDoc else block(inBlock).docId
+  def curTf: Int = block(inBlock).tf
 
   /** Max possible contribution from the current position onward. */
   def remainingUb: Double =
@@ -108,55 +112,81 @@ final class TermCursor(
 
   def next(): Unit = {
     inBlock += 1
-    if (inBlock >= decoded.length) {
-      blockIdx += 1
-      if (!exhausted) loadBlock()
-    }
+    if (inBlock >= blocks(blockIdx).n) enterBlock(blockIdx + 1)
   }
 
   def advanceTo(target: Long): Unit = {
     if (exhausted || curDoc >= target) return
     if (blocks(blockIdx).lastDoc < target) {
       // skip whole blocks on lastDoc headers — no decode
-      while (blockIdx < blocks.length && blocks(blockIdx).lastDoc < target) blockIdx += 1
-      if (exhausted) return
-      loadBlock()
+      var i = blockIdx
+      while (i < blocks.length && blocks(i).lastDoc < target) i += 1
+      enterBlock(i)
+      if (exhausted || blocks(i).firstDoc >= target) return
     }
+    val d = block
     var a = inBlock
-    var b = decoded.length
-    while (a < b) { val m = (a + b) >>> 1; if (decoded(m).docId < target) a = m + 1 else b = m }
+    var b = d.length
+    while (a < b) { val m = (a + b) >>> 1; if (d(m).docId < target) a = m + 1 else b = m }
     inBlock = a // guaranteed < length because lastDoc >= target
   }
 }
 
 object TermCursor {
-  /** Build a cursor from the (possibly salted) segment rows of one term.
-    * Salted (hot) sub-lists interleave docIds, so they are merged and
-    * re-blocked — block skip metadata stays exact.
-    */
-  def fromRows(rows: Seq[SegmentRow], withPos: Boolean, termIdx: Int, idfWeight: Double, bm25: Bm25): TermCursor =
-    new TermCursor(mergedBlocks(rows, withPos), withPos, termIdx, idfWeight, bm25)
-
   /** Merge a term's (possibly salted) segment rows into one rid-ascending
-    * block list. Hoist this per (shard, term) when serving a query batch —
-    * the decode+sort+re-encode of a hot term is paid once, not per query.
+    * block list. Salted (hot) sub-lists interleave docIds, so they are
+    * merged and re-blocked — block skip metadata stays exact. Hoist this per
+    * (shard, term) when serving a query batch — the decode+sort+re-encode
+    * of a hot term is paid once, not per query. Cursors never read
+    * positions, so the merge drops them.
     */
-  def mergedBlocks(rows: Seq[SegmentRow], withPos: Boolean): Array[PostingBlock] =
+  def mergedBlocks(rows: Seq[SegmentRow]): Array[PostingBlock] =
     if (rows.size == 1) rows.head.blocks.map(_.toBlock).toArray
-    else {
-      val merged = rows.iterator
-        .flatMap(r => PostingCodec.decode(r.blocks.map(_.toBlock), withPos))
-        .toArray.sortBy(_.docId)
-      val (bs, _, _) = PostingCodec.encode(merged.iterator, withPos)
-      bs.toArray
+    else PostingCodec.encode(Searcher.mergeSalts(rows, false).iterator, false)._1.toArray
+}
+
+/** One query's BM25 set-up, shared by the distributed, batch and local
+  * paths: distinct terms in query order, their df, and the N and avgdl they
+  * are scored under. termIdx = position in `terms`, so every path sums a
+  * doc's contributions in one order and the floats are bit-identical.
+  */
+final case class Bm25Plan(
+    terms: Seq[String], df: Map[String, Long], numDocs: Long, avgdl: Double, bm25: Bm25) {
+  val termIdx: Map[String, Int] = terms.zipWithIndex.toMap
+  val idf: Map[String, Double] = terms.map(t => t -> bm25.idf(numDocs, df(t))).toMap
+
+  /** A cursor over one shard's (merged) blocks of `term`. */
+  def cursor(term: String, blocks: Array[PostingBlock], cache: DecodeCache = null): TermCursor =
+    new TermCursor(blocks, termIdx(term), idf(term), bm25, cache)
+}
+
+object Bm25Plan {
+  /** Plan for the query `text`; no terms when it has no tokens. */
+  def forQuery(reader: IndexReader, text: String, bm25: Bm25,
+      corpusStats: Option[CorpusStats] = None): Bm25Plan =
+    forTerms(reader, Searcher.queryTokens(reader, text).map(_.term).distinct, bm25, corpusStats)
+
+  /** Plan for distinct `terms` in query order: df, N and avgdl from the
+    * reader's own lexicon and manifest, or corpus-wide from `corpusStats`.
+    */
+  def forTerms(reader: IndexReader, terms: Seq[String], bm25: Bm25,
+      corpusStats: Option[CorpusStats] = None): Bm25Plan = {
+    val (n, avgdl, dfOf) = corpusStats match {
+      case Some(cs) => (cs.numDocs, cs.avgDoclen, cs.df)
+      case None =>
+        (reader.manifest.numDocs, reader.manifest.avgDoclen,
+          reader.termStats(terms).map { case (t, (df, _)) => t -> df })
     }
+    Bm25Plan(terms, terms.map(t => t -> dfOf.getOrElse(t, 0L)).toMap, n, avgdl, bm25)
+  }
 }
 
 /** Disjunctive top-k BM25 over one shard: exhaustive term-at-a-time (the
   * rank-identity oracle) and document-at-a-time block-max WAND (the scale
-  * path). Both sum per-doc contributions in termIdx order so floats are
-  * bit-identical; WAND prunes only when the upper bound is strictly below
-  * the current threshold, preserving score ties.
+  * path). Both score into a [[Bm25Shard.TopK]] the caller owns and sum
+  * per-doc contributions in termIdx order so floats are bit-identical; WAND
+  * prunes only when the upper bound is strictly below the current
+  * threshold, preserving score ties.
   */
 object Bm25Shard {
 
@@ -171,61 +201,71 @@ object Bm25Shard {
     }
   }
 
-  private def better(a: ScoredDoc, b: ScoredDoc): Boolean =
-    resultOrdering.compare(a, b) < 0
+  /** One query's top-k state: the k best documents offered so far and θ,
+    * the k-th best score once k are held (−∞ before). θ comes only from
+    * held documents, so pruning on it never drops one of the final answer.
+    * Shared by every shard a query walks, θ carries across shards as over
+    * Groonga's single docid space. Not thread-safe: one query, one thread.
+    */
+  final class TopK(k: Int) {
+    // head = max under resultOrdering = the weakest held doc, next to evict
+    private val heap = new scala.collection.mutable.PriorityQueue[ScoredDoc]()(resultOrdering)
+    private var theta = Double.NegativeInfinity
+    private var nScored = 0L
 
-  /** min-heap by "weakness": head is the candidate to evict. */
-  private val weakestFirst: Ordering[ScoredDoc] = new Ordering[ScoredDoc] {
-    def compare(a: ScoredDoc, b: ScoredDoc): Int = {
-      val c = java.lang.Double.compare(b.score, a.score)
-      if (c != 0) c else java.lang.Long.compare(a.docId, b.docId)
+    def threshold: Double = theta
+
+    /** Documents offered so far — the ones the kernel evaluated. */
+    def scored: Long = nScored
+
+    def offer(s: ScoredDoc): Unit = {
+      nScored += 1
+      if (heap.size < k) heap.enqueue(s)
+      else if (k > 0 && resultOrdering.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
+      if (k > 0 && heap.size == k) theta = heap.head.score
     }
+
+    /** The held documents in (score desc, docId asc) order. */
+    def result: Seq[ScoredDoc] = heap.toSeq.sorted(resultOrdering)
   }
 
   def exhaustive(
       cursors: Seq[TermCursor],
       docLen: Long => Int,
-      avgdl: Double,
-      bm25: Bm25,
-      k: Int,
+      plan: Bm25Plan,
+      top: TopK,
       deleted: Long => Boolean = _ => false
-  ): Seq[ScoredDoc] = {
+  ): Unit = {
     // accumulate in termIdx order (cursors arrive sorted by termIdx)
     val acc = new java.util.HashMap[Long, java.lang.Double]()
     cursors.sortBy(_.termIdx).foreach { c =>
       while (!c.exhausted) {
         val d = c.curDoc
         if (!deleted(d)) {
-          val s = c.idfWeight * bm25.tfNorm(c.curTf, docLen(d), avgdl)
+          val s = c.idfWeight * plan.bm25.tfNorm(c.curTf, docLen(d), plan.avgdl)
           val prev = acc.get(d)
           acc.put(d, if (prev == null) s else prev + s)
         }
         c.next()
       }
     }
-    val all = new scala.collection.mutable.ArrayBuffer[ScoredDoc](acc.size)
     val it = acc.entrySet().iterator()
-    while (it.hasNext) { val e = it.next(); all += ScoredDoc(e.getKey, e.getValue) }
-    all.sortWith(better).take(k).toSeq
+    while (it.hasNext) { val e = it.next(); top.offer(ScoredDoc(e.getKey, e.getValue)) }
   }
 
+  /** Block-max WAND over one shard's cursors, scoring into `top`. With a
+    * `top` shared across shards, a shard starts at the θ the shards before
+    * it reached, so a cursor whose bound is below θ — a hot term once k
+    * docs matching a rarer term are held — is skipped with `advanceTo`
+    * instead of scored (measured gain: see [[LocalServing]]).
+    */
   def wand(
       cursors0: Seq[TermCursor],
       docLen: Long => Int,
-      avgdl: Double,
-      bm25: Bm25,
-      k: Int,
+      plan: Bm25Plan,
+      top: TopK,
       deleted: Long => Boolean = _ => false
-  ): Seq[ScoredDoc] = {
-    val heap = new scala.collection.mutable.PriorityQueue[ScoredDoc]()(weakestFirst)
-    var threshold = Double.NegativeInfinity
-
-    def heapPush(s: ScoredDoc): Unit = {
-      if (heap.size < k) heap.enqueue(s)
-      else if (better(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
-      if (heap.size == k) threshold = heap.head.score
-    }
-
+  ): Unit = {
     var live: Array[TermCursor] = cursors0.filterNot(_.exhausted).toArray
     // indexed by global termIdx — a shard may hold only a subset of the
     // query's terms, so size by the max index, not the cursor count
@@ -234,16 +274,18 @@ object Bm25Shard {
     val matched = new Array[Boolean](maxTermIdx)
 
     while (live.nonEmpty) {
-      java.util.Arrays.sort(live, Ordering.by[TermCursor, Long](_.curDoc))
+      java.util.Arrays.sort(live, byCurDoc)
+      // θ is −∞ until the heap holds k, so every doc is a pivot until then
+      val threshold = top.threshold
       var ubSum = 0.0
       var pivot = -1
       var i = 0
       while (pivot < 0 && i < live.length) {
         ubSum += live(i).remainingUb
-        if (heap.size < k || ubSum >= threshold) pivot = i
+        if (ubSum >= threshold) pivot = i
         i += 1
       }
-      if (pivot < 0) return result(heap)
+      if (pivot < 0) return
       val pivotDoc = live(pivot).curDoc
       if (live(0).curDoc == pivotDoc) {
         var cbUb = 0.0
@@ -252,15 +294,14 @@ object Bm25Shard {
         if (deleted(pivotDoc)) {
           var j2 = 0
           while (j2 < live.length && live(j2).curDoc == pivotDoc) { live(j2).next(); j2 += 1 }
-          live = live.filterNot(_.exhausted)
-        } else if (heap.size < k || cbUb >= threshold) {
+        } else if (cbUb >= threshold) {
           // evaluate: gather contributions, sum in termIdx order
           java.util.Arrays.fill(matched, false)
           j = 0
           var nMatch = 0
           while (j < live.length && live(j).curDoc == pivotDoc) {
             val c = live(j)
-            contrib(c.termIdx) = c.idfWeight * bm25.tfNorm(c.curTf, docLen(pivotDoc), avgdl)
+            contrib(c.termIdx) = c.idfWeight * plan.bm25.tfNorm(c.curTf, docLen(pivotDoc), plan.avgdl)
             matched(c.termIdx) = true
             nMatch = j + 1
             j += 1
@@ -268,22 +309,24 @@ object Bm25Shard {
           var score = 0.0
           var t = 0
           while (t < contrib.length) { if (matched(t)) score += contrib(t); t += 1 }
-          heapPush(ScoredDoc(pivotDoc, score))
+          top.offer(ScoredDoc(pivotDoc, score))
           j = 0
           while (j < nMatch) { live(j).next(); j += 1 }
         } else {
           var j2 = 0
           while (j2 < live.length && live(j2).curDoc == pivotDoc) { live(j2).next(); j2 += 1 }
         }
-        live = live.filterNot(_.exhausted)
+        live = dropExhausted(live)
       } else {
         live(0).advanceTo(pivotDoc)
-        if (live(0).exhausted) live = live.filterNot(_.exhausted)
+        live = dropExhausted(live)
       }
     }
-    result(heap)
   }
 
-  private def result(h: scala.collection.mutable.PriorityQueue[ScoredDoc]): Seq[ScoredDoc] =
-    h.toSeq.sortWith(better)
+  private val byCurDoc: java.util.Comparator[TermCursor] =
+    (a, b) => java.lang.Long.compare(a.curDoc, b.curDoc)
+
+  private def dropExhausted(live: Array[TermCursor]): Array[TermCursor] =
+    if (live.exists(_.exhausted)) live.filterNot(_.exhausted) else live
 }

@@ -98,64 +98,46 @@ object Engine {
   ): Dataset[ScoredDoc] = {
     val spark = reader.spark
     import spark.implicits._
-    val qtoks = Searcher.queryTokens(reader, text)
-    if (qtoks.isEmpty) return spark.emptyDataset[ScoredDoc]
-    val terms = qtoks.map(_.term).distinct
-    // df/N/avgdl default to THIS index's own manifest+lexicon; an explicit
-    // CorpusStats scores these postings under corpus-wide statistics (the
-    // cross-shard-comparable mode of LogicalSearch.bm25TopK)
-    val (n, avgdl, dfOf) = corpusStats match {
-      case Some(cs) => (cs.numDocs, cs.avgDoclen, cs.df)
-      case None =>
-        val stats = reader.termStats(terms) // tiny: one row per query term
-        (reader.manifest.numDocs, reader.manifest.avgDoclen,
-          stats.map { case (t, (df, _)) => t -> df })
-    }
-    val withPos = reader.manifest.withPositions
-    // stable term order → bit-identical float sums in every path
-    val termIdx: Map[String, Int] = terms.zipWithIndex.toMap
-    val idfs: Map[String, Double] =
-      terms.map(t => t -> bm25.idf(n, dfOf.getOrElse(t, 0L))).toMap
+    val plan = Bm25Plan.forQuery(reader, text, bm25, corpusStats)
+    if (plan.terms.isEmpty) return spark.emptyDataset[ScoredDoc]
 
     val delB = reader.deletedBroadcast
-    def scoreShard(segRows: Seq[graft.index.SegmentRow],
-        normsBlob: Array[Byte], deleted: Set[Long]): Iterator[ScoredDoc] = {
+    val perShard = scoreShards(reader, plan.terms) { (segRows, normsBlob) =>
       val lookup = Norms.decode(normsBlob)
-      val cursors = segRows.groupBy(_.term).toSeq
-        .map { case (t, rows) =>
-          TermCursor.fromRows(rows, withPos, termIdx(t), idfs(t), bm25)
-        }
-        .sortBy(_.termIdx)
-      val top =
-        if (useWand) Bm25Shard.wand(cursors, lookup.apply, avgdl, bm25, k, deleted)
-        else Bm25Shard.exhaustive(cursors, lookup.apply, avgdl, bm25, k, deleted)
-      top.iterator
-    }
-    val perShard =
-      if (reader.isServing) {
-        // serving mode: norms pinned once as a broadcast (one varint/doc) —
-        // minimum latency for a query workload on a warmed reader
-        val normsB = reader.normsBroadcast
-        reader.segmentsFor(terms).groupByKey(_.shard)
-          .flatMapGroups { (shard, segIt) =>
-            scoreShard(segIt.toSeq, normsB.value(shard), delB.value)
-          }
-      } else {
-        // batch mode: cogroup the query's segment rows with the norms
-        // sidecar ON SHARD — no whole-corpus driver collect, so the path
-        // holds at 10^12 docs where norms exceed driver memory
-        val normsByShard = reader.norms.groupByKey(_._1)
-        reader.segmentsFor(terms).groupByKey(_.shard)
-          .cogroup(normsByShard) { (shard, segIt, normIt) =>
-            val segRows = segIt.toSeq
-            if (segRows.isEmpty) Iterator.empty
-            else normIt.toSeq.headOption match {
-              case Some((_, blob)) => scoreShard(segRows, blob, delB.value)
-              case None => Iterator.empty
-            }
-          }
+      val byTerm = segRows.groupBy(_.term)
+      val cursors = plan.terms.flatMap { t =>
+        byTerm.get(t).map(rows => plan.cursor(t, TermCursor.mergedBlocks(rows)))
       }
+      // one heap per shard call: each shard emits its own top-k, merged by topK
+      val top = new Bm25Shard.TopK(k)
+      if (useWand) Bm25Shard.wand(cursors, lookup.apply, plan, top, delB.value)
+      else Bm25Shard.exhaustive(cursors, lookup.apply, plan, top, delB.value)
+      top.result.iterator
+    }
     topK(perShard, k)
+  }
+
+  /** Runs `score(segRows, normsBlob)` once per shard holding any of
+    * `terms`. Serving mode reads norms from the pinned broadcast (minimum
+    * latency); batch mode cogroups the norms sidecar ON SHARD — no driver
+    * collect, so the path holds at 10^12 docs where norms exceed driver memory.
+    */
+  private def scoreShards[T: org.apache.spark.sql.Encoder](reader: IndexReader, terms: Seq[String])(
+      score: (Seq[SegmentRow], Array[Byte]) => Iterator[T]): Dataset[T] = {
+    import reader.spark.implicits._
+    val segs = reader.segmentsFor(terms).groupByKey(_.shard)
+    if (reader.isServing) {
+      val normsB = reader.normsBroadcast
+      segs.flatMapGroups((shard, segIt) => score(segIt.toSeq, normsB.value(shard)))
+    } else
+      segs.cogroup(reader.norms.groupByKey(_._1)) { (_, segIt, normIt) =>
+        val segRows = segIt.toSeq
+        if (segRows.isEmpty) Iterator.empty
+        else normIt.toSeq.headOption match {
+          case Some((_, blob)) => score(segRows, blob)
+          case None => Iterator.empty
+        }
+      }
   }
 
   /** AND of two term matches with the reference's too-many-matches escape
@@ -256,7 +238,7 @@ object Engine {
         it.flatMap { case (id, s1, content) =>
           // Add-mode tokenization = exactly what the build indexed, so
           // the aligned count equals the posting-path noccur it replaces
-          val toks = tok.tokenize(if (content == null) "" else content,
+          val toks = tok.tokenizeEnabled(if (content == null) "" else content,
             graft.analysis.TokenizeMode.Add)
           val noccur = Searcher.countAligned(toks, qtoksB)
           if (noccur > 0) Some(ScoredDoc(id, s1 + noccur)) else None
@@ -347,64 +329,35 @@ object Engine {
     val allTerms = qTerms.flatMap(_._2).distinct
     if (allTerms.isEmpty)
       return spark.emptyDataset[(Long, Long, Double)].toDF("query_id", "doc_id", "score")
-    val stats = reader.termStats(allTerms)
-    val n = reader.manifest.numDocs
-    val avgdl = reader.manifest.avgDoclen
-    val withPos = reader.manifest.withPositions
-    // per-query (term -> (termIdx, idf)) plans, one broadcast for the batch
-    val plans: Seq[(Long, Map[String, (Int, Double)])] = qTerms.map { case (qid, ts) =>
-      qid -> ts.zipWithIndex.map { case (t, i) =>
-        t -> (i, bm25.idf(n, stats.get(t).map(_._1).getOrElse(0L)))
-      }.toMap
-    }
-    val plansB = spark.sparkContext.broadcast(plans)
+    reader.termStats(allTerms) // one lexicon scan; the per-query plans hit its memo
+    // per-query plans, one broadcast for the batch
+    val plansB = spark.sparkContext.broadcast(
+      qTerms.map { case (qid, ts) => qid -> Bm25Plan.forTerms(reader, ts, bm25) })
     val delB = reader.deletedBroadcast
     val kLocal = k
-    def scoreShardBatch(segRows: Seq[graft.index.SegmentRow],
-        normsBlob: Array[Byte]): Iterator[(Long, Long, Double)] = {
+    val perShard = scoreShards(reader, allTerms) { (segRows, normsBlob) =>
       // merge salted sub-lists ONCE per (shard, term) — shared by every
       // query in the batch (hot terms are exactly the ones many queries hit)
       val byTerm: Map[String, Array[graft.codec.PostingBlock]] =
         segRows.groupBy(_.term)
-          .map { case (t, rows) => t -> TermCursor.mergedBlocks(rows, withPos) }
+          .map { case (t, rows) => t -> TermCursor.mergedBlocks(rows) }
       val lookup = Norms.decode(normsBlob)
       // one decode memo for the whole batch: every query that walks a hot
       // term's block reuses the first decode instead of re-paying it
-      val decodeCache = new DecodeCache(withPos)
+      val decodeCache = new DecodeCache()
       plansB.value.iterator.flatMap { case (qid, plan) =>
-        val cursors = plan.toSeq.collect {
-          case (t, (idx, idf)) if byTerm.contains(t) =>
-            new TermCursor(byTerm(t), withPos, idx, idf, bm25, decodeCache)
-        }.sortBy(_.termIdx)
+        val cursors = plan.terms.flatMap { t =>
+          byTerm.get(t).map(blocks => plan.cursor(t, blocks, decodeCache))
+        }
         if (cursors.isEmpty) Iterator.empty
         else {
-          val top =
-            if (useWand) Bm25Shard.wand(cursors, lookup.apply, avgdl, bm25, kLocal, delB.value)
-            else Bm25Shard.exhaustive(cursors, lookup.apply, avgdl, bm25, kLocal, delB.value)
-          top.iterator.map(s => (qid, s.docId, s.score))
+          val top = new Bm25Shard.TopK(kLocal)
+          if (useWand) Bm25Shard.wand(cursors, lookup.apply, plan, top, delB.value)
+          else Bm25Shard.exhaustive(cursors, lookup.apply, plan, top, delB.value)
+          top.result.iterator.map(s => (qid, s.docId, s.score))
         }
       }
     }
-    val perShard =
-      if (reader.isServing) {
-        val normsB = reader.normsBroadcast
-        reader.segmentsFor(allTerms).groupByKey(_.shard)
-          .flatMapGroups { (shard, segIt) =>
-            scoreShardBatch(segIt.toSeq, normsB.value(shard))
-          }
-      } else {
-        // batch mode: norms cogrouped on shard — no driver-side collect
-        // (see bm25TopK; the same 10^12-doc argument)
-        reader.segmentsFor(allTerms).groupByKey(_.shard)
-          .cogroup(reader.norms.groupByKey(_._1)) { (shard, segIt, normIt) =>
-            val segRows = segIt.toSeq
-            if (segRows.isEmpty) Iterator.empty
-            else normIt.toSeq.headOption match {
-              case Some((_, blob)) => scoreShardBatch(segRows, blob)
-              case None => Iterator.empty
-            }
-          }
-      }
     perShard.groupByKey(_._1).flatMapGroups { (qid, it) =>
       it.toSeq.sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._2 < b._2))
         .take(kLocal).iterator

@@ -47,7 +47,8 @@ object Searcher {
       .map(t => QTok(t.term, t.pos))
   }
 
-  private def mergeSalts(rows: Seq[SegmentRow], withPos: Boolean): Array[Posting] = {
+  /** A term's (possibly salted) segment rows as one docId-ascending list. */
+  private[search] def mergeSalts(rows: Seq[SegmentRow], withPos: Boolean): Array[Posting] = {
     if (rows.size == 1)
       PostingCodec.decode(rows.head.blocks.map(_.toBlock), withPos).toArray
     else

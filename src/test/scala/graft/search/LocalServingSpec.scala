@@ -90,6 +90,59 @@ class LocalServingSpec extends AnyFunSuite {
     assert(!loc.exists(s => s.docId == 3L || s.docId == 17L) && loc.nonEmpty)
   }
 
+  /** 16 shards (docId mod 16), 320 docs. "hot" is in every doc and salted;
+    * "rare" is in docs 15, 30, ..., 240, one per shard, and a higher shard
+    * holds a lower docId, so shards offer tied docs in descending docId
+    * order. Those 16 docs come in two groups of identical scores (w$i is
+    * never queried), so the k-th score is tied for every k tested.
+    */
+  private def sharedThetaIndex(): String = {
+    import spark.implicits._
+    val docs = (0L until 320L).map { i =>
+      val text =
+        if (i % 15 == 0 && i > 0 && i <= 240) { if (i % 60 == 15) s"hot rare rare w$i" else "hot rare" }
+        else s"hot w$i ${"hot " * (i % 4).toInt}"
+      (i, text)
+    }
+    val d = java.nio.file.Files.createTempDirectory("graft_lst_").toString
+    IndexBuilder.build(spark, docs.toDF("docId", "content"), d,
+      IndexConfig(tokenizerName = "TokenDelimit", nShards = 16,
+        buildPartitions = 4, hotTermDf = 200L, nSalts = 2))
+    d
+  }
+
+  test("one threshold across shards: local == exhaustive distributed, ties and tombstones") {
+    val reader = new IndexReader(spark, sharedThetaIndex())
+    // b = 0 makes a block's bound equal to its docs' scores, so on "rare"
+    // with k = 10 later shards offer docs whose bound equals θ and whose
+    // docId is lower than held ones: pruning on ub <= θ would drop them
+    def check(): Unit = {
+      val ls = new LocalServing(reader)
+      for (bm25 <- Seq(Bm25(), Bm25(b = 0.0));
+           q <- Seq("hot rare", "rare hot w60", "rare", "hot"); k <- Seq(1, 3, 10)) {
+        val exhaustive = Engine.bm25TopK(reader, q, k, useWand = false, bm25 = bm25)
+          .collect().toSeq.sorted(Bm25Shard.resultOrdering)
+        assert(ls.bm25TopK(q, k, bm25) == exhaustive, s"mismatch for <$q> k=$k $bm25")
+      }
+      assert(ls.fallbacks == 0)
+    }
+    check()
+    // tombstone tied rare docs (the smallest ids win ties) and hot-only docs
+    Deletes.delete(reader, org.apache.spark.sql.functions.col("docId").isin(15L, 30L, 45L, 2L, 3L))
+    reader.invalidateDeletes()
+    check()
+  }
+
+  test("docsScored: a hot+rare query skips most hot postings") {
+    val reader = new IndexReader(spark, sharedThetaIndex())
+    val ls = new LocalServing(reader)
+    val dfHot = reader.termStats(Seq("hot"))("hot")._1
+    assert(dfHot == 320L)
+    assert(ls.bm25TopK("hot rare", 3).size == 3)
+    assert(ls.docsScored > 0L && ls.docsScored < dfHot / 2,
+      s"scored ${ls.docsScored} of df(hot)=$dfHot")
+  }
+
   test("Dataset view is a LocalRelation that composes without a search job") {
     val reader = new IndexReader(spark, dir)
     val ls = new LocalServing(reader)
