@@ -365,10 +365,6 @@ object Logical {
       .map(_.stripPrefix(s"$ShardCol="))
       .sorted
 
-  /** [[shardList]] against the active session's filesystem config. */
-  def shardList(root: String): Seq[String] =
-    shardList(SparkSession.active, root)
-
   private def minusMicro(t: java.sql.Timestamp): java.sql.Timestamp =
     java.sql.Timestamp.from(t.toInstant.minusNanos(1000))
 
@@ -448,21 +444,15 @@ object Logical {
       granularity: Option[String] = None): Set[String] =
     windowPlan(spark, root, shardKey, range, granularity)._2
 
-  /** `logical_table_remove` with a range (reference
-    * logical_table_remove.rb:40-58: delete the rows whose shard-key value
-    * falls in the range; an emptied shard is removed outright) — the
-    * retention primitive at scale. Shards FULLY covered by the range are
-    * whole-directory deletes (no data read or rewritten — the common
-    * drop-old-days case costs O(shards), like the reference removing whole
-    * per-day tables); at most the 2 BOUNDARY shards rewrite with the
-    * surviving rows. Returns the number of shards dropped whole.
-    */
   /** Finish or roll back a [[removeRange]] interrupted by JVM death: for
     * every `.old_<shard>` backup left behind — the op's only durable
     * intermediate state — either the rewrite already renamed into place
     * (shard dir exists → drop the backup), or a completed rewrite dir is
-    * waiting (rename it in, then drop the backup), or nothing replaced
-    * the shard (rename the backup back — full rollback, no rows lost).
+    * waiting (rename it in, then drop the backup; a completed rewrite
+    * with no rows means the shard emptied out, so rewrite and backup both
+    * delete and the shard stays dropped, as [[removeRange]] leaves it), or
+    * nothing replaced the shard (rename the backup back — full rollback,
+    * no rows lost).
     * Orphan `.rewrite_*` dirs without a backup are pre-rename leftovers
     * and simply delete. Idempotent; call on startup or before a
     * [[removeRange]]. Returns (completed, rolledBack) shard counts.
@@ -482,8 +472,10 @@ object Logical {
         completed += 1
       } else if (F.exists(spark, rewrite) &&
           F.exists(spark, s"$rewrite/_SUCCESS")) {
-        // survivors fully written: finish the op
-        if (!F.rename(spark, rewrite, shardDir))
+        // survivors fully written: finish the op — an emptied shard is
+        // removed outright, never renamed back into place
+        if (!holdsRows(spark, rewrite)) F.delete(spark, rewrite): Unit
+        else if (!F.rename(spark, rewrite, shardDir))
           throw new java.io.IOException(s"recover: rename failed for shard $s")
         F.delete(spark, s"$root/$b"): Unit
         completed += 1
@@ -505,6 +497,27 @@ object Logical {
     (completed, rolledBack)
   }
 
+  /** True when the parquet directory `dir` holds at least one row. A
+    * directory with no data files (only `_SUCCESS`/checksum entries) holds
+    * none and is not read, since Spark cannot infer a schema from it.
+    */
+  private def holdsRows(spark: SparkSession, dir: String): Boolean = {
+    val (f, p) = graft.core.Fs.fs(spark, dir)
+    f.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    } && spark.read.parquet(dir).limit(1).count() > 0
+  }
+
+  /** `logical_table_remove` with a range (reference
+    * logical_table_remove.rb:40-58: delete the rows whose shard-key value
+    * falls in the range; an emptied shard is removed outright) — the
+    * retention primitive at scale. Shards FULLY covered by the range are
+    * whole-directory deletes (no data read or rewritten — the common
+    * drop-old-days case costs O(shards), like the reference removing whole
+    * per-day tables); at most the 2 BOUNDARY shards rewrite with the
+    * surviving rows. Returns the number of shards dropped whole.
+    */
   def removeRange(spark: SparkSession, root: String, shardKey: String,
       range: LogicalRange,
       granularity: Option[String] = None): Int = {
@@ -542,7 +555,7 @@ object Logical {
         val keep = rows.where(!rowPred(rows, shardKey, range).getOrElse(lit(true)))
         val tmp = s"$root/.rewrite_$s"
         keep.write.mode("overwrite").parquet(tmp)
-        val kept = spark.read.parquet(tmp).limit(1).count() > 0
+        val kept = holdsRows(spark, tmp)
         val backup = s"$root/.old_$s"
         if (F.exists(spark, backup)) F.delete(spark, backup): Unit
         if (!F.rename(spark, shardDir, backup))

@@ -167,23 +167,24 @@ object LogicalSearch {
           graft.search.Searcher.queryTokens(r0, query).map(_.term).distinct
         Some(corpusStats(spark, root, shards, terms))
       }
+    // every per-shard result is a lazy plan: the union below is ONE Spark
+    // plan, run by the caller's one action
     val perShard = shards.map { s =>
       val r = reader(spark, root, s)
       if (!boundarySet.contains(s))
         Engine.bm25TopK(r, query, k, corpusStats = stats)
           .toDF("docId", "score").withColumn("shard", lit(s))
       else {
-        // boundary: trim to the window BEFORE taking the shard's top-k —
-        // trimming after would silently drop in-window docs ranked below
+        // boundary: trim to the window BEFORE taking the top-k — trimming
+        // after would silently drop in-window docs ranked below
         // out-of-window ones. Exhaustive scoring over the shard's matches
         // (cost ∝ one day's matches, the same order as the semi-join)
-        // keeps the merge exact.
+        // keeps the merge exact; the global top-k below takes the k best.
         Engine.bm25TopK(r, query, r.manifest.numDocs.toInt, useWand = false,
             corpusStats = stats)
           .toDF("docId", "score").withColumn("shard", lit(s))
           .join(inWindowIds(spark, root, shardKey, range, s, idCol),
             Seq("docId"), "left_semi")
-          .orderBy(desc("score"), asc("docId")).limit(k)
       }
     }
     perShard.reduce(_ unionByName _)

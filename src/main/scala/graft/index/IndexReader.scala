@@ -79,7 +79,7 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
   /** Broadcast per-shard norms blobs (decoded lazily per executor task).
     * Size = one varint per doc (~2-4 B): fine to ship whole for sandbox
     * scales; at 10^12 docs the per-shard blob is instead co-read with the
-    * shard's segment rows (the [[graft.search.Engine.bm25TopK]] cogroup
+    * shard's segment rows (the [[graft.search.Engine.bm25TopKBatch]] cogroup
     * path, kept for that regime).
     */
   lazy val normsBroadcast: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Byte]]] = {

@@ -3,26 +3,6 @@ package graft.search
 import graft.codec.{PostingCodec, PostingBlock}
 import graft.core.Posting
 import graft.index.{IndexReader, SegmentRow}
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
-/** Typed k-heap aggregator (north-star requirement): merges per-shard
-  * candidate lists into the global top-k, ordering (score desc, docId asc).
-  * Rows reaching it are already shard-local top-k, so per-row O(k log k) is
-  * negligible next to the scan it aggregates.
-  */
-final case class TopKBuf(items: Seq[ScoredDoc])
-
-final class TopKAgg(k: Int) extends Aggregator[ScoredDoc, TopKBuf, TopKBuf] {
-  private def trim(s: Seq[ScoredDoc]): Seq[ScoredDoc] =
-    s.sortWith((a, b) => a.score > b.score || (a.score == b.score && a.docId < b.docId)).take(k)
-  def zero: TopKBuf = TopKBuf(Seq.empty)
-  def reduce(b: TopKBuf, a: ScoredDoc): TopKBuf = TopKBuf(trim(b.items :+ a))
-  def merge(a: TopKBuf, b: TopKBuf): TopKBuf = TopKBuf(trim(a.items ++ b.items))
-  def finish(r: TopKBuf): TopKBuf = TopKBuf(trim(r.items))
-  def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-  def outputEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-}
 
 /** Shared posting-block decode memo: repeated walks over the same blocks
   * (many queries of one batch within a shard task, or a serving node's

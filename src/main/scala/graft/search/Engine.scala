@@ -5,16 +5,6 @@ import graft.index.{IndexReader, SegmentRow}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed query execution over the sharded index.
-  *
-  * Layout rationale (100 TB design): each shard is a complete sub-index for a
-  * docId range. A query touches only the segment rows of its terms (parquet
-  * predicate pushdown on `term`), grouped by shard — every shard evaluates
-  * independently in parallel (the intra-query parallelism Groonga lacks,
-  * SURVEY.md §4.2) and emits at most its local top-k; the global answer is a
-  * tree-reduce of k-heaps via [[TopKAgg]]. No shuffle touches posting data
-  * larger than the per-shard candidate lists.
-  */
 /** Corpus-wide BM25 statistics (total docs, global avgdl, per-term df) for
   * scoring ONE index's postings under GLOBAL idf — merged over a shard set
   * by [[graft.command.LogicalSearch.corpusStats]].
@@ -22,6 +12,17 @@ import org.apache.spark.sql.functions._
 final case class CorpusStats(
     numDocs: Long, avgDoclen: Double, df: Map[String, Long])
 
+/** Distributed query execution over the sharded index.
+  *
+  * Layout rationale (100 TB design): each shard is a complete sub-index for a
+  * docId range. A query touches only the segment rows of its terms (parquet
+  * predicate pushdown on `term`), grouped by shard — every shard evaluates
+  * independently in parallel (the intra-query parallelism Groonga lacks,
+  * SURVEY.md §4.2) and emits at most its local top-k per query; one small
+  * shuffle keyed by query id merges those k-lists into the global top-k
+  * ([[bm25TopKBatch]]). No shuffle touches posting data larger than the
+  * per-shard candidate lists.
+  */
 object Engine {
 
   /** Full-text match with reference score semantics:
@@ -84,9 +85,10 @@ object Engine {
       }
   }
 
-  /** Disjunctive (bag-of-terms) top-k BM25 — the north-star query path.
-    * Per-shard evaluation cogroups the query's segment rows with the shard's
-    * norms sidecar; WAND prunes on block-max bounds; [[TopKAgg]] merges.
+  /** Disjunctive (bag-of-terms) top-k BM25 — the north-star query path: a
+    * [[bm25TopKBatch]] of one query, so the single and batch paths share one
+    * plan, kernel and merge. Lazy like the batch: no Spark job runs until
+    * the result is acted on.
     */
   def bm25TopK(
       reader: IndexReader,
@@ -96,48 +98,9 @@ object Engine {
       bm25: Bm25 = Bm25(),
       corpusStats: Option[CorpusStats] = None
   ): Dataset[ScoredDoc] = {
-    val spark = reader.spark
-    import spark.implicits._
-    val plan = Bm25Plan.forQuery(reader, text, bm25, corpusStats)
-    if (plan.terms.isEmpty) return spark.emptyDataset[ScoredDoc]
-
-    val delB = reader.deletedBroadcast
-    val perShard = scoreShards(reader, plan.terms) { (segRows, normsBlob) =>
-      val lookup = Norms.decode(normsBlob)
-      val byTerm = segRows.groupBy(_.term)
-      val cursors = plan.terms.flatMap { t =>
-        byTerm.get(t).map(rows => plan.cursor(t, TermCursor.mergedBlocks(rows)))
-      }
-      // one heap per shard call: each shard emits its own top-k, merged by topK
-      val top = new Bm25Shard.TopK(k)
-      if (useWand) Bm25Shard.wand(cursors, lookup.apply, plan, top, delB.value)
-      else Bm25Shard.exhaustive(cursors, lookup.apply, plan, top, delB.value)
-      top.result.iterator
-    }
-    topK(perShard, k)
-  }
-
-  /** Runs `score(segRows, normsBlob)` once per shard holding any of
-    * `terms`. Serving mode reads norms from the pinned broadcast (minimum
-    * latency); batch mode cogroups the norms sidecar ON SHARD — no driver
-    * collect, so the path holds at 10^12 docs where norms exceed driver memory.
-    */
-  private def scoreShards[T: org.apache.spark.sql.Encoder](reader: IndexReader, terms: Seq[String])(
-      score: (Seq[SegmentRow], Array[Byte]) => Iterator[T]): Dataset[T] = {
     import reader.spark.implicits._
-    val segs = reader.segmentsFor(terms).groupByKey(_.shard)
-    if (reader.isServing) {
-      val normsB = reader.normsBroadcast
-      segs.flatMapGroups((shard, segIt) => score(segIt.toSeq, normsB.value(shard)))
-    } else
-      segs.cogroup(reader.norms.groupByKey(_._1)) { (_, segIt, normIt) =>
-        val segRows = segIt.toSeq
-        if (segRows.isEmpty) Iterator.empty
-        else normIt.toSeq.headOption match {
-          case Some((_, blob)) => score(segRows, blob)
-          case None => Iterator.empty
-        }
-      }
+    bm25TopKBatch(reader, Seq(0L -> text), k, useWand, bm25, corpusStats)
+      .select(col("doc_id").as("docId"), col("score")).as[ScoredDoc]
   }
 
   /** AND of two term matches with the reference's too-many-matches escape
@@ -305,12 +268,18 @@ object Engine {
     partial.map(p => SetOps.or(withUnsplit, p)).getOrElse(withUnsplit)
   }
 
-  /** Batched top-k BM25: evaluates a whole query workload in ONE Spark job —
+  /** Batched top-k BM25: evaluates a whole query workload in ONE Spark plan —
     * a single term-pruned segments scan serves every query, each shard
     * evaluates all queries locally, and a final tiny shuffle (≤ queries ×
-    * shards × k candidate rows) merges per-query top-k. This is the
-    * throughput-serving mode: per-query cost amortizes the job overhead
-    * that dominates single-query latency in a cluster scheduler.
+    * shards × k candidate rows) merges per-query top-k in (score desc,
+    * docId asc) order. This is the throughput-serving mode: per-query cost
+    * amortizes the job overhead that dominates single-query latency in a
+    * cluster scheduler. Serving mode reads norms from the pinned broadcast
+    * (minimum latency); otherwise the norms sidecar cogroups ON SHARD — no
+    * driver collect, so the path holds at 10^12 docs where norms exceed
+    * driver memory. `corpusStats` scores every query under corpus-wide
+    * (df, N, avgdl) instead of the reader's own. Lazy: the plan runs when
+    * the result is acted on.
     * Returns (query_id, doc_id, score).
     */
   def bm25TopKBatch(
@@ -318,7 +287,8 @@ object Engine {
       queries: Seq[(Long, String)],
       k: Int,
       useWand: Boolean = true,
-      bm25: Bm25 = Bm25()
+      bm25: Bm25 = Bm25(),
+      corpusStats: Option[CorpusStats] = None
   ): DataFrame = {
     val spark = reader.spark
     import spark.implicits._
@@ -329,36 +299,53 @@ object Engine {
     val allTerms = qTerms.flatMap(_._2).distinct
     if (allTerms.isEmpty)
       return spark.emptyDataset[(Long, Long, Double)].toDF("query_id", "doc_id", "score")
-    reader.termStats(allTerms) // one lexicon scan; the per-query plans hit its memo
+    // one lexicon scan; the per-query plans hit its memo
+    if (corpusStats.isEmpty) reader.termStats(allTerms): Unit
     // per-query plans, one broadcast for the batch
     val plansB = spark.sparkContext.broadcast(
-      qTerms.map { case (qid, ts) => qid -> Bm25Plan.forTerms(reader, ts, bm25) })
+      qTerms.map { case (qid, ts) => qid -> Bm25Plan.forTerms(reader, ts, bm25, corpusStats) })
     val delB = reader.deletedBroadcast
     val kLocal = k
-    val perShard = scoreShards(reader, allTerms) { (segRows, normsBlob) =>
-      // merge salted sub-lists ONCE per (shard, term) — shared by every
-      // query in the batch (hot terms are exactly the ones many queries hit)
-      val byTerm: Map[String, Array[graft.codec.PostingBlock]] =
-        segRows.groupBy(_.term)
-          .map { case (t, rows) => t -> TermCursor.mergedBlocks(rows) }
-      val lookup = Norms.decode(normsBlob)
-      // one decode memo for the whole batch: every query that walks a hot
-      // term's block reuses the first decode instead of re-paying it
-      val decodeCache = new DecodeCache()
-      plansB.value.iterator.flatMap { case (qid, plan) =>
-        val cursors = plan.terms.flatMap { t =>
-          byTerm.get(t).map(blocks => plan.cursor(t, blocks, decodeCache))
+    val score: (Seq[SegmentRow], Array[Byte]) => Iterator[(Long, Long, Double)] = {
+      (segRows, normsBlob) =>
+        // merge salted sub-lists ONCE per (shard, term) — shared by every
+        // query in the batch (hot terms are exactly the ones many queries hit)
+        val byTerm: Map[String, Array[graft.codec.PostingBlock]] =
+          segRows.groupBy(_.term)
+            .map { case (t, rows) => t -> TermCursor.mergedBlocks(rows) }
+        val lookup = Norms.decode(normsBlob)
+        // one decode memo for the whole batch: every query that walks a hot
+        // term's block reuses the first decode instead of re-paying it
+        val decodeCache = new DecodeCache()
+        plansB.value.iterator.flatMap { case (qid, plan) =>
+          val cursors = plan.terms.flatMap { t =>
+            byTerm.get(t).map(blocks => plan.cursor(t, blocks, decodeCache))
+          }
+          if (cursors.isEmpty) Iterator.empty
+          else {
+            // one heap per (query, shard): each shard emits its own top-k
+            val top = new Bm25Shard.TopK(kLocal)
+            if (useWand) Bm25Shard.wand(cursors, lookup.apply, plan, top, delB.value)
+            else Bm25Shard.exhaustive(cursors, lookup.apply, plan, top, delB.value)
+            top.result.iterator.map(s => (qid, s.docId, s.score))
+          }
         }
-        if (cursors.isEmpty) Iterator.empty
-        else {
-          val top = new Bm25Shard.TopK(kLocal)
-          if (useWand) Bm25Shard.wand(cursors, lookup.apply, plan, top, delB.value)
-          else Bm25Shard.exhaustive(cursors, lookup.apply, plan, top, delB.value)
-          top.result.iterator.map(s => (qid, s.docId, s.score))
-        }
-      }
     }
-    perShard.groupByKey(_._1).flatMapGroups { (qid, it) =>
+    val segs = reader.segmentsFor(allTerms).groupByKey(_.shard)
+    val perShard =
+      if (reader.isServing) {
+        val normsB = reader.normsBroadcast
+        segs.flatMapGroups((shard, segIt) => score(segIt.toSeq, normsB.value(shard)))
+      } else
+        segs.cogroup(reader.norms.groupByKey(_._1)) { (_, segIt, normIt) =>
+          val segRows = segIt.toSeq
+          if (segRows.isEmpty) Iterator.empty
+          else normIt.toSeq.headOption match {
+            case Some((_, blob)) => score(segRows, blob)
+            case None => Iterator.empty
+          }
+        }
+    perShard.groupByKey(_._1).flatMapGroups { (_, it) =>
       it.toSeq.sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._2 < b._2))
         .take(kLocal).iterator
     }.toDF("query_id", "doc_id", "score")
@@ -471,14 +458,6 @@ object Engine {
       else (weighted.size >> 3) + 1
     val chosen = weighted.sortBy { case (_, w, i) => (-w, i) }.take(limit)
     orTermsScores(reader, chosen.map { case (t, w, _) => t -> w.toDouble }.toMap)
-  }
-
-  /** Global top-k via the typed k-heap aggregator. */
-  def topK(scored: Dataset[ScoredDoc], k: Int): Dataset[ScoredDoc] = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val buf = scored.select(new TopKAgg(k).toColumn).head()
-    spark.createDataset(buf.items)
   }
 
   /** Set algebra on scored result sets (reference grn_table_setoperation,

@@ -50,10 +50,6 @@ object IncrementalIndex {
         s"$baseDir/deltas/$d/manifest.json"))
       .sorted.map(d => s"$baseDir/deltas/$d")
 
-  /** [[deltaDirs]] against the active session's filesystem config. */
-  def deltaDirs(baseDir: String): Seq[String] =
-    deltaDirs(SparkSession.active, baseDir)
-
   /** Sort-merge base + delta indexes into `outDir`: posting lists of the
     * same (term, shard, salt) are decoded, merged by docId, and
     * re-encoded (block metadata stays exact); docs/norms/lexicon/manifest

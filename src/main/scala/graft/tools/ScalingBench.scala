@@ -1,8 +1,5 @@
 package graft.tools
 
-import graft.core.Corpus
-import graft.index.{IndexBuilder, IndexConfig, IndexReader}
-import graft.search.Engine
 import org.apache.spark.sql.SparkSession
 
 /** Scaling-efficiency evidence for BASELINE.md: the SAME north-star job
@@ -20,11 +17,6 @@ import org.apache.spark.sql.SparkSession
   * Prints one JSON line.
   */
 object ScalingBench {
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
-  }
 
   private def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -51,49 +43,12 @@ object ScalingBench {
     val bestQps = scala.collection.mutable.Map[Int, Double]().withDefaultValue(0.0)
     val bestP50 = scala.collection.mutable.Map[Int, Double]().withDefaultValue(Double.MaxValue)
 
-    val queryTerms: Seq[String] =
-      Seq("if", "return", "while") ++ Seq(5, 40, 300).map(Corpus.ident) ++
-        Seq(2000, 3000, 4000, 4500).map(Corpus.ident)
-    // 256 queries: enough work per batch job that 32 slots have something
-    // to chew on (64-query batches finish in ~1s and measure overhead)
-    val batch = (0 until 256).map { i =>
-      val a = queryTerms(i % queryTerms.size)
-      val b = queryTerms((i * 7 + 3) % queryTerms.size)
-      val c = Corpus.ident(800 + (i * 13) % 3000)
-      (i.toLong, if (a == b) s"$a $c" else s"$a $b $c")
-    }
-
     for (rep <- 1 to reps; cpus <- levels) {
       val spark = session(cpus)
-      import spark.implicits._
-      val dir = s"/dev/shm/graft-scaling-build"
-      deleteRecursively(new java.io.File(dir))
-      val docs = spark.range(0, nFiles, 1, 64).map { i =>
-        val f = Corpus.file(42L, i)
-        (i, f.repo, f.path, f.commit, f.lang, f.content)
-      }.toDF("docId", "repo", "path", "commit", "lang", "content")
-      val t0 = System.nanoTime()
-      IndexBuilder.build(spark, docs, dir,
-        IndexConfig(tokenizerName = "TokenBigram", withPositions = true,
-          nShards = 64, buildPartitions = 64,
-          hotTermDf = math.max(1000L, nFiles / 8), nSalts = 8))
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      val fps = nFiles / buildSec
+      val leg = BenchLeg.run(spark, nFiles, "/dev/shm/graft-scaling-build")
+      val (fps, qps, p50) = (leg.filesPerSec, leg.batchQps, leg.p50Ms)
       if (fps > bestBuild(cpus)) bestBuild(cpus) = fps
-
-      // query workload on the leg's own index (serving mode: cached)
-      val reader = new IndexReader(spark, dir).cacheForServing()
-      Engine.bm25TopKBatch(reader, batch, 10).count() // warm
-      val tq = System.nanoTime()
-      Engine.bm25TopKBatch(reader, batch, 10).count()
-      val qps = batch.size / ((System.nanoTime() - tq) / 1e9)
       if (qps > bestQps(cpus)) bestQps(cpus) = qps
-      val lats = queryTerms.take(6).map { q =>
-        val t = System.nanoTime()
-        Engine.bm25TopK(reader, q, 10).collect()
-        (System.nanoTime() - t) / 1e6
-      }.sorted
-      val p50 = lats(lats.size / 2)
       if (p50 < bestP50(cpus)) bestP50(cpus) = p50
 
       System.err.println(f"rep $rep local[$cpus]: build $fps%.1f files/s, batch $qps%.1f qps, p50 $p50%.0f ms")

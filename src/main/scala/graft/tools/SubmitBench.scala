@@ -1,8 +1,5 @@
 package graft.tools
 
-import graft.core.Corpus
-import graft.index.{IndexBuilder, IndexConfig, IndexReader}
-import graft.search.Engine
 import org.apache.spark.sql.SparkSession
 
 /** The north-star job packaged for `spark-submit` (north rule: "run via
@@ -22,11 +19,6 @@ import org.apache.spark.sql.SparkSession
   */
 object SubmitBench {
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     val nFiles = if (args.nonEmpty) args(0).toLong else 160000L
     val reps = if (args.length > 1) args(1).toInt else 3
@@ -36,18 +28,7 @@ object SubmitBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
     val cores = spark.sparkContext.defaultParallelism
-
-    val queryTerms: Seq[String] =
-      Seq("if", "return", "while") ++ Seq(5, 40, 300).map(Corpus.ident) ++
-        Seq(2000, 3000, 4000, 4500).map(Corpus.ident)
-    val batch = (0 until 256).map { i =>
-      val a = queryTerms(i % queryTerms.size)
-      val b = queryTerms((i * 7 + 3) % queryTerms.size)
-      val c = Corpus.ident(800 + (i * 13) % 3000)
-      (i.toLong, if (a == b) s"$a $c" else s"$a $b $c")
-    }
 
     var bestFps = 0.0
     var bestQps = 0.0
@@ -58,34 +39,13 @@ object SubmitBench {
     def dirBytes(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles().map(dirBytes).sum else f.length()
     for (rep <- 1 to reps) {
-      deleteRecursively(new java.io.File(dir))
-      val docs = spark.range(0, nFiles, 1, 64).map { i =>
-        val f = Corpus.file(42L, i)
-        (i, f.repo, f.path, f.commit, f.lang, f.content)
-      }.toDF("docId", "repo", "path", "commit", "lang", "content")
-      val t0 = System.nanoTime()
-      IndexBuilder.build(spark, docs, dir,
-        IndexConfig(tokenizerName = "TokenBigram", withPositions = true,
-          nShards = 64, buildPartitions = 64,
-          hotTermDf = math.max(1000L, nFiles / 8), nSalts = 8))
-      val fps = nFiles / ((System.nanoTime() - t0) / 1e9)
+      val leg = BenchLeg.run(spark, nFiles, dir)
+      val (fps, qps, p50) = (leg.filesPerSec, leg.batchQps, leg.p50Ms)
       if (fps > bestFps) bestFps = fps
-
-      val reader = new IndexReader(spark, dir).cacheForServing()
-      totalTokens = reader.manifest.totalTokens
-      indexBytes = dirBytes(new java.io.File(dir))
-      Engine.bm25TopKBatch(reader, batch, 10).count() // warm
-      val tq = System.nanoTime()
-      Engine.bm25TopKBatch(reader, batch, 10).count()
-      val qps = batch.size / ((System.nanoTime() - tq) / 1e9)
       if (qps > bestQps) bestQps = qps
-      val lats = queryTerms.take(6).map { q =>
-        val t = System.nanoTime()
-        Engine.bm25TopK(reader, q, 10).collect()
-        (System.nanoTime() - t) / 1e6
-      }.sorted
-      val p50 = lats(lats.size / 2)
       if (p50 < bestP50) bestP50 = p50
+      totalTokens = leg.reader.manifest.totalTokens
+      indexBytes = dirBytes(new java.io.File(dir))
       System.err.println(
         f"rep $rep cores=$cores: build $fps%.1f files/s, batch $qps%.1f qps, p50 $p50%.0f ms")
       // drop this rep's pinned segments cache before the next rep builds —
@@ -93,7 +53,7 @@ object SubmitBench {
       // measured under (best-of must compare like with like)
       spark.catalog.clearCache()
     }
-    deleteRecursively(new java.io.File(dir))
+    BenchLeg.deleteRecursively(new java.io.File(dir))
     println(
       s"""{"metric":"spark_submit_leg","cores":$cores,"n_files":$nFiles,"reps":$reps,""" +
         s""""build_files_per_sec":${f"$bestFps%.1f"},"bm25_batch_qps":${f"$bestQps%.1f"},""" +

@@ -139,6 +139,15 @@ class PlanAuditSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(lex.contains("PushedFilters: [In(term, [fast,spark])]"),
       s"lexicon scan not term-pruned:\n$lex")
+    // a single BM25 query is a lazy batch of one: its plan holds the
+    // term-pruned segments scan and merges per-shard top-k by query id,
+    // not through an object aggregate run eagerly inside the call
+    val bm25 = search.Engine.bm25TopK(r, "spark fast", 10)
+      .queryExecution.executedPlan.toString
+    assert(bm25.contains("PushedFilters: [In(term, [fast,spark])]"),
+      s"single-query BM25 plan lacks the term-pruned segments scan:\n$bm25")
+    assert(!bm25.contains("ObjectHashAggregate"),
+      s"single-query BM25 merges through an object aggregate:\n$bm25")
   }
 
   test("log_count: interior shards count with ZERO columns; boundaries read only ts") {

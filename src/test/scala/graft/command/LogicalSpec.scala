@@ -145,7 +145,7 @@ class LogicalSpec extends AnyFunSuite {
   }
 
   test("shardList names shards in key order") {
-    assert(Logical.shardList(root) == Seq("20240101", "20240102",
+    assert(Logical.shardList(spark, root) == Seq("20240101", "20240102",
       "20240103", "20240104", "20240201"))
   }
 
@@ -159,7 +159,7 @@ class LogicalSpec extends AnyFunSuite {
     val dropped = Logical.removeRange(spark, dir, "t",
       rng("2024-01-02T12:00:00Z", max = "2024-02-01T00:00:00Z"))
     assert(dropped == 3, s"expected 3 dropped shards, got $dropped")
-    assert(Logical.shardList(dir) == Seq("20240101", "20240102"))
+    assert(Logical.shardList(spark, dir) == Seq("20240101", "20240102"))
     val left = Logical.table(spark, dir).select("id")
       .collect().map(_.getLong(0)).sorted
     assert(left.toSeq == Seq(1L, 2L, 3L))
@@ -183,11 +183,11 @@ class LogicalSpec extends AnyFunSuite {
       mem.addData((1L, ts("2024-01-01T10:00:00Z"), 1.0),
         (2L, ts("2024-01-01T12:00:00Z"), 2.0))
       q.processAllAvailable()
-      assert(Logical.shardList(root) == Seq("20240101"))
+      assert(Logical.shardList(spark, root) == Seq("20240101"))
       // a later micro-batch opens a NEW day shard; earlier shards untouched
       mem.addData((3L, ts("2024-01-02T01:00:00Z"), 3.0))
       q.processAllAvailable()
-      assert(Logical.shardList(root) == Seq("20240101", "20240102"))
+      assert(Logical.shardList(spark, root) == Seq("20240101", "20240102"))
       // the batch readers work on the streamed layout, pruning included
       assert(Logical.count(spark, root, "t",
         rng("2024-01-02T00:00:00Z")) == 1)
@@ -250,7 +250,7 @@ class LogicalSpec extends AnyFunSuite {
     try Logical.writeSharded(rows, "t", dir)
     finally spark.conf.set("spark.sql.session.timeZone", "UTC")
     // written under Tokyo time: 20:00Z is Jan 10 local
-    assert(Logical.shardList(dir) == Seq("20240110"))
+    assert(Logical.shardList(spark, dir) == Seq("20240110"))
     // reading under UTC: the bounds' shard names must resolve through the
     // WRITER's zone (marker) — a UTC derivation would look only in
     // 20240109 and silently miss the row
@@ -296,16 +296,30 @@ class LogicalSpec extends AnyFunSuite {
     assert(F.rename(spark, s"$dir/_shard=20240102", s"$dir/.old_20240102"))
     // shard 20240103: pre-rename rewrite leftover next to an intact shard
     rowsDf.filter($"id" === 5L).write.parquet(s"$dir/.rewrite_20240103")
+    // shard 20240104: the shard emptied out — its completed rewrite holds
+    // no data files, only _SUCCESS; recover must drop it, not revive it
+    F.writeString(spark, s"$dir/.rewrite_20240104/_SUCCESS", "")
+    assert(F.rename(spark, s"$dir/_shard=20240104", s"$dir/.old_20240104"))
+    // shard 20240201: emptied too, but written as removeRange writes an
+    // empty survivor set — a zero-row parquet file next to _SUCCESS
+    rowsDf.filter(lit(false)).write.parquet(s"$dir/.rewrite_20240201")
+    assert(F.rename(spark, s"$dir/_shard=20240201", s"$dir/.old_20240201"))
     val (completed, rolledBack) = Logical.recover(spark, dir)
-    assert(completed == 1 && rolledBack == 1, s"$completed/$rolledBack")
+    assert(completed == 3 && rolledBack == 1, s"$completed/$rolledBack")
     assert(!F.exists(spark, s"$dir/.old_20240101") &&
       !F.exists(spark, s"$dir/.old_20240102") &&
+      !F.exists(spark, s"$dir/.old_20240104") &&
       !F.exists(spark, s"$dir/.rewrite_20240101") &&
-      !F.exists(spark, s"$dir/.rewrite_20240103"))
+      !F.exists(spark, s"$dir/.rewrite_20240103") &&
+      !F.exists(spark, s"$dir/.rewrite_20240104") &&
+      !F.exists(spark, s"$dir/.old_20240201") &&
+      !F.exists(spark, s"$dir/.rewrite_20240201"))
+    assert(Logical.shardList(spark, dir) == Seq("20240101", "20240102", "20240103"))
     // 20240101 now holds only the rewrite's survivor (id 1); 20240102's
-    // rows (3, 4) are fully restored; everything else untouched
+    // rows (3, 4) are fully restored; 20240104 (id 6) and 20240201 (id 7)
+    // stay dropped; everything else untouched
     assert(Logical.table(spark, dir).select("id").as[Long].collect().toSet ==
-      Set(1L, 3L, 4L, 5L, 6L, 7L))
+      Set(1L, 3L, 4L, 5L))
     // idempotent: a second pass is a no-op
     assert(Logical.recover(spark, dir) == ((0, 0)))
   }

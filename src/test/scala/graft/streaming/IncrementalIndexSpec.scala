@@ -63,7 +63,7 @@ class IncrementalIndexSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
 
-    val deltas = IncrementalIndex.deltaDirs(tmp)
+    val deltas = IncrementalIndex.deltaDirs(spark, tmp)
     assert(deltas.nonEmpty)
     val m = IncrementalIndex.compact(spark, s"$tmp/base" +: deltas, s"$tmp/merged")
     assert(m.numDocs == 90)
