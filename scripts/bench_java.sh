@@ -1,8 +1,15 @@
 #!/bin/bash
 # Run graft.Bench directly with java (no sbt startup): compiled classes +
 # the Spark distribution jars. Same JVM flags build.sbt uses for forked runs.
+#
+#   scripts/bench_java.sh                                  per-round benchmark
+#   scripts/bench_java.sh scaling [nFiles] [reps] [N,4N]   N-vs-4N legs, one JVM
+#   scripts/bench_java.sh submit [nFiles] [reps]           no master (see
+#                                                          run_spark_submit.sh)
+#
+# GRAFT_MAIN runs another main on the same classpath (e.g. graft.tools.QueryTime).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do

@@ -4,13 +4,16 @@
 # parallelism levels, ALTERNATING legs inside one JVM with best-per-level
 # reporting (the sandbox host throttles CPU in bursts — see BASELINE.md §3
 # methodology). Default pair 2→8 cores (inside the host's memory-bandwidth
-# envelope); pass "8,32" as $3 for the bandwidth-capped pair.
+# envelope); pass "8,32" as $3 for the bandwidth-capped pair. Runs
+# `graft.Bench scaling`.
+#
+# Usage: scripts/run_scaling.sh [nFiles] [reps] [N,4N]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 N=${1:-320000}
 REPS=${2:-4}
 LEVELS=${3:-2,8}
 rm -rf /dev/shm/graft-scaling-build /dev/shm/graft-spark-local
 sbt -batch compile 1>&2
-GRAFT_MAIN=graft.tools.ScalingBench SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-40g} \
-  ./scripts/bench_java.sh "$N" "$REPS" "$LEVELS"
+SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-40g} \
+  ./scripts/bench_java.sh scaling "$N" "$REPS" "$LEVELS"

@@ -1,13 +1,13 @@
 #!/bin/bash
 # North-rule evidence: the whole pipeline "runs via spark-submit ... at two
 # cluster sizes (N and 4N)". Packages the library jar and submits
-# graft.tools.SubmitBench (which sets NO master — parallelism comes from
+# `graft.Bench submit` (which sets NO master — parallelism comes from
 # --master alone) at local[N] and local[4N], alternating submissions REPS
 # times, then prints per-level bests + scaling efficiency.
 #
 # Usage: scripts/run_spark_submit.sh [nFiles] [reps] [N] (4N implied)
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 N_FILES=${1:-320000}
 REPS=${2:-3}
 N=${3:-2}
@@ -21,7 +21,7 @@ submit() { # $1 = cores
     --master "local[$1]" \
     --driver-memory "${SPARK_DRIVER_MEM:-40g}" \
     --conf spark.local.dir=/dev/shm/graft-spark-local \
-    --class graft.tools.SubmitBench "$JAR" "$N_FILES" "${LEG_REPS:-2}" 2>/dev/null |
+    --class graft.Bench "$JAR" submit "$N_FILES" "${LEG_REPS:-2}" 2>/dev/null |
     grep '"metric":"spark_submit_leg"'
 }
 

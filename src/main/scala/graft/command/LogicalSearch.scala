@@ -167,8 +167,10 @@ object LogicalSearch {
           graft.search.Searcher.queryTokens(r0, query).map(_.term).distinct
         Some(corpusStats(spark, root, shards, terms))
       }
-    // every per-shard result is a lazy plan: the union below is ONE Spark
-    // plan, run by the caller's one action
+    // every per-shard scoring plan is lazy, so the union below is ONE Spark
+    // plan, run by the caller's one action. Only df lookups run here: each
+    // bm25TopK (or corpusStats above, under globalIdf) scans the lexicon of a
+    // non-serving shard reader for the query terms it has not seen before
     val perShard = shards.map { s =>
       val r = reader(spark, root, s)
       if (!boundarySet.contains(s))

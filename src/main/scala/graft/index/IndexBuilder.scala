@@ -132,11 +132,13 @@ object IndexManifest {
   *                      delta+varint blocks with skip entries and block-max tf
   *                      (the chunk/dgap layout of reference lib/ii.c:2659).
   *
-  * Outputs under `dir`: docs/ (docId, meta, doclen, sha256, shard),
-  * segments/ (shard, term, salt, df, cf, blocks), lexicon/ (term, df, cf),
+  * Outputs under `dir`: docs/ (the input's columns — docId, content,
+  * meta — plus sha256, shard), lexicon/ (term, df, cf), norms/ (shard,
+  * varint doclen blob), segments/ (shard, term, salt, df, cf, blocks),
   * metrics/ (per-partition lineage rows: terms, postings, bytes, elapsedMs),
-  * manifest.json. Each stage is checkpointed; `build` resumes past completed
-  * stages (north-rule resumability).
+  * _hot_terms, one `_stage_<name>.done` marker per stage, manifest.json.
+  * Each stage is checkpointed; `build` resumes past completed stages
+  * (north-rule resumability).
   */
 object IndexBuilder {
 

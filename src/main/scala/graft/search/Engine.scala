@@ -87,8 +87,8 @@ object Engine {
 
   /** Disjunctive (bag-of-terms) top-k BM25 — the north-star query path: a
     * [[bm25TopKBatch]] of one query, so the single and batch paths share one
-    * plan, kernel and merge. Lazy like the batch: no Spark job runs until
-    * the result is acted on.
+    * plan, kernel and merge. Eager only where the batch is: see
+    * [[bm25TopKBatch]] for the lexicon scan the call itself may run.
     */
   def bm25TopK(
       reader: IndexReader,
@@ -278,8 +278,15 @@ object Engine {
     * (minimum latency); otherwise the norms sidecar cogroups ON SHARD — no
     * driver collect, so the path holds at 10^12 docs where norms exceed
     * driver memory. `corpusStats` scores every query under corpus-wide
-    * (df, N, avgdl) instead of the reader's own. Lazy: the plan runs when
-    * the result is acted on.
+    * (df, N, avgdl) instead of the reader's own. The scoring plan is lazy,
+    * but the call itself reads df for the query terms: without
+    * `corpusStats`, on a reader without [[IndexReader.cacheForServing]],
+    * that is one term-pruned lexicon scan (one Spark job) over the terms
+    * this reader has not looked up before ([[IndexReader.termStats]]
+    * memoizes them), plus, on the reader's first query, one schema-reading
+    * job per parquet relation it opens (lexicon, segments, norms). A
+    * serving reader answers from its driver-side lexicon map and runs no
+    * job until the result is acted on.
     * Returns (query_id, doc_id, score).
     */
   def bm25TopKBatch(

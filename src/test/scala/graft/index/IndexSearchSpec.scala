@@ -171,6 +171,37 @@ class IndexSearchSpec extends AnyFunSuite {
     }
   }
 
+  test("building a bm25TopK plan runs only the df lookup: no job when serving or when memoized") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    def jobsIn(f: => Any): Int = {
+      org.apache.spark.SparkTestBus.drain(sc)
+      jobs.set(0)
+      f
+      org.apache.spark.SparkTestBus.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    val serving = new IndexReader(spark, dir).cacheForServing()
+    try {
+      assert(jobsIn(Engine.bm25TopK(serving, "if return", 10)) == 0)
+      val fresh = new IndexReader(spark, dir)
+      // the first call opens the reader's relations and scans the lexicon
+      // for the terms' df; the same terms again are memoized; a new term
+      // costs exactly its lexicon scan
+      assert(jobsIn(Engine.bm25TopK(fresh, "if return", 10)) > 0)
+      assert(jobsIn(Engine.bm25TopK(fresh, "return if", 10)) == 0)
+      assert(jobsIn(Engine.bm25TopK(fresh, "if while", 10)) == 1)
+    } finally {
+      sc.removeSparkListener(listener)
+      serving.segments.unpersist()
+    }
+  }
+
   test("set ops: or/and/andNot/adjust score arithmetic") {
     import spark.implicits._
     val a = Engine.matchScores(reader, "return")
