@@ -9,9 +9,11 @@
 #   n           number of pairs (seeds first-seed .. first-seed+n-1)
 #   first-seed  default 1001; use seeds not used while writing the change
 #
-# Run from anywhere inside the checkout. The parent is exported with
-# `git archive` into a temporary directory (removed on exit) and builds its
-# own `.bench_build/` there; the working tree is the change. Each run uses
+# Run from anywhere inside the checkout. Both sides run from sibling
+# temporary directories (removed on exit), so neither gains from where it
+# sits: the parent is exported with `git archive`, the change is the working
+# tree's tracked and untracked-but-not-ignored files, copied as they are now.
+# Each side builds its own `.bench_build/` in its directory. Each run uses
 # `perfbench/run.py --seconds <run_seconds of BENCHMARK.json>`. Output: each
 # pair's end-to-end metrics (parent/change), then for every end-to-end
 # metric each side's quartiles, the change's win count, the median change
@@ -31,9 +33,11 @@ root=$(git rev-parse --show-toplevel)
 seconds=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
   "$root/BENCHMARK.json")
 parent=$(mktemp -d "${TMPDIR:-/tmp}/bench_pair_parent.XXXXXX")
+change=$(mktemp -d "${TMPDIR:-/tmp}/bench_pair_change.XXXXXX")
 out=$(mktemp -d "${TMPDIR:-/tmp}/bench_pair_out.XXXXXX")
-trap 'rm -rf "$parent"' EXIT
+trap 'rm -rf "$parent" "$change"' EXIT
 git -C "$root" archive "$rev" | tar -x -C "$parent"
+(cd "$root" && git ls-files -z -co --exclude-standard | tar --null --ignore-failed-read -T - -c) | tar -x -C "$change"
 echo "results in $out (parent $(git -C "$root" rev-parse --short "$rev"), $workload, ${seconds}s runs)"
 
 run() { # side dir seed
@@ -49,9 +53,9 @@ run() { # side dir seed
 for ((i = 0; i < n; i++)); do
   seed=$((seed0 + i))
   if ((i % 2 == 0)); then
-    run parent "$parent" "$seed"; run change "$root" "$seed"
+    run parent "$parent" "$seed"; run change "$change" "$seed"
   else
-    run change "$root" "$seed"; run parent "$parent" "$seed"
+    run change "$change" "$seed"; run parent "$parent" "$seed"
   fi
   echo "pair $((i + 1))/$n seed $seed done"
 done

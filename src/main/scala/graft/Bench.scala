@@ -229,10 +229,22 @@ object Bench {
 
   // ---- per-round benchmark ----------------------------------------------
 
+  /** The per-round run's three parallelism levels for `cpus` slots: all of
+    * them, a quarter and a sixteenth, each at least 1. Below 8 slots the two
+    * lower levels coincide (4 -> 4, 1, 1).
+    */
+  def levels(cpus: Int): (Int, Int, Int) = (cpus, math.max(1, cpus / 4), math.max(1, cpus / 16))
+
+  /** Scaling efficiency of `fastCpus` over `slowCpus` slots from their
+    * throughputs; NaN (written as null) when the two levels are equal, where
+    * the ratio would read 1.0 whatever the code does.
+    */
+  def efficiency(fast: Double, slow: Double, fastCpus: Int, slowCpus: Int): Double =
+    if (fastCpus == slowCpus) Double.NaN else fast / slow / (fastCpus.toDouble / slowCpus)
+
   private def perRound(): ListMap[String, Any] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val cpusN = math.max(1, cpus / 4)
+    val (cpus, cpusN, cpusNN) = levels(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // One corpus size for EVERY leg: legs must run the identical job, and a
     // leg must be long enough (~a minute at the low level) to average over
     // the host's multi-second throttle bursts AND to amortize the fixed
@@ -250,13 +262,12 @@ object Bench {
     // within-envelope low pair (2->8); the capped high pair (8->32) is
     // reported alongside with that ceiling explicit. Every rep's throughput
     // is recorded: a throttled leg shows up as visible evidence instead of
-    // silently deflating the headline.
-    val cpusNN = math.max(1, cpus / 16)
+    // silently deflating the headline. Coinciding levels run once per rep.
     val buildDir = benchDir("graft-bench-build")
     // the LAST leg's on-disk index (local[cpusNN]) is the one that survives
     // and serves the query phase — every leg builds identical content, so
     // which leg wrote it doesn't affect the queries
-    val buildLegs = Seq.fill(reps)(Seq(cpus, cpusN, cpusNN)).flatten.map { legCpus =>
+    val buildLegs = Seq.fill(reps)(Seq(cpus, cpusN, cpusNN).distinct).flatten.map { legCpus =>
       val spark = session(Some(legCpus))
       val l = try leg(spark, buildN, buildDir, serve = false) finally spark.stop()
       System.err.println(f"[bench] build leg local[$legCpus]: ${l.filesPerSec}%.1f files/s")
@@ -265,8 +276,8 @@ object Bench {
     val legFps: Map[Int, Seq[Double]] = buildLegs.groupMap(_._1)(_._2.filesPerSec)
     val bestFps: Map[Int, Double] = legFps.map { case (c, fs) => c -> fs.max }
     val fullLeg = buildLegs.filter(_._1 == cpus).last._2
-    val effLow = bestFps(cpusN) / bestFps(cpusNN) / (cpusN.toDouble / cpusNN)
-    val effHigh = bestFps(cpus) / bestFps(cpusN) / (cpus.toDouble / cpusN)
+    val effLow = efficiency(bestFps(cpusN), bestFps(cpusNN), cpusN, cpusNN)
+    val effHigh = efficiency(bestFps(cpus), bestFps(cpusN), cpus, cpusN)
 
     // ---- query-side N-vs-4N scaling: one batched-retrieval job ----------
     // The same 1024-query top-k job at local[cpusNN] and local[cpusN]
@@ -278,7 +289,7 @@ object Bench {
     // reps (the build phase above already brackets these in time, bounding
     // throttle-burst bias).
     val qBatch = queryBatch(1024)
-    val qRepQps: Map[Int, Seq[Double]] = Seq(cpusN, cpusNN).map { legCpus =>
+    val qRepQps: Map[Int, Seq[Double]] = Seq(cpusN, cpusNN).distinct.map { legCpus =>
       val s = session(Some(legCpus))
       val rd = new IndexReader(s, buildDir).cacheForServing()
       Engine.bm25TopKBatch(rd, qBatch, 10).count() // warm (footers, JIT)
@@ -288,7 +299,7 @@ object Bench {
       legCpus -> qps
     }.groupMapReduce(_._1)(_._2)(_ ++ _)
     val bestQps = qRepQps.map { case (c, qs) => c -> qs.max }
-    val qEff = bestQps(cpusN) / bestQps(cpusNN) / (cpusN.toDouble / cpusNN)
+    val qEff = efficiency(bestQps(cpusN), bestQps(cpusNN), cpusN, cpusNN)
 
     // ---- query + headline phase at full parallelism ----------------------
     val spark = session(Some(cpus))
@@ -428,7 +439,7 @@ object Bench {
       "build" -> ListMap("files" -> buildN, "sec" -> fixed(lastBuildSec, 3),
         "files_per_sec" -> fixed(bestFps(cpus), 1),
         "total_tokens" -> fullLeg.manifest.totalTokens, "num_docs" -> fullLeg.manifest.numDocs),
-      "build_legs" -> repsBy(Seq(cpus, cpusN, cpusNN).map(c => c -> legFps(c)), 1),
+      "build_legs" -> repsBy(Seq(cpus, cpusN, cpusNN).distinct.map(c => c -> legFps(c)), 1),
       "query_reps" -> repsBy(qReps, 3),
       "cleaning" -> ListMap("files" -> cleanN, "gopher" -> stage(gSec, gN),
         "decontaminate" -> stage(dcSec, dcN), "dedup" -> stage(ddSec, ddN),
@@ -442,7 +453,7 @@ object Bench {
       "query_scaling" -> ListMap("n_cpus" -> cpusNN, "n_qps" -> fixed(bestQps(cpusNN), 1),
         "xn_cpus" -> cpusN, "xn_qps" -> fixed(bestQps(cpusN), 1), "n_queries" -> qBatch.size,
         "efficiency" -> fixed(qEff, 3),
-        "reps" -> repsBy(Seq(cpusN, cpusNN).map(c => c -> qRepQps(c)), 1)),
+        "reps" -> repsBy(Seq(cpusN, cpusNN).distinct.map(c => c -> qRepQps(c)), 1)),
       "bm25" -> ListMap("n_queries" -> bmQueries.size, "p50_ms" -> fixed(pct(lats, 0.5), 1),
         "p95_ms" -> fixed(pct(lats, 0.95), 1), "reps" -> repsBy(bmReps, 1)),
       "bm25_batch" -> ListMap("n" -> batch.size, "sec" -> fixed(batchSec, 3),

@@ -41,6 +41,16 @@ trait AddSink {
   def acceptTerm(term: String, pos: Int): Unit
 }
 
+/** Receiver of the spans a tokenizer's cursor loop emits. An abstract class
+  * with primitive parameters rather than a function type: Scala does not
+  * specialize Function3/Function4, so a `(Int, Int, Int, Boolean) => Unit`
+  * callback boxes every token's offsets and position. A lambda converts to
+  * this class (single abstract method) without boxing.
+  */
+private[analysis] abstract class SpanEmitter {
+  def emit(start: Int, endEx: Int, pos: Int, forcePrefix: Boolean): Unit
+}
+
 trait GTokenizer extends Serializable {
   def normalizer: String => Normalized
   def tokenize(s: String, mode: TokenizeMode): Vector[Token] =
@@ -121,9 +131,9 @@ final class NgramTokenizer(
     emitTokens(nz, TokenizeMode.Add)((p, r, pos, _) => sink.acceptSpan(p, r, pos))
 
   /** Core cursor loop shared by the Token and the allocation-free paths;
-    * `f(start, endEx, pos, forcePrefix)` per emitted token.
+    * `f.emit(start, endEx, pos, forcePrefix)` per emitted token.
     */
-  private def emitTokens(nz: Normalized, mode: TokenizeMode)(f: (Int, Int, Int, Boolean) => Unit): Unit = {
+  private def emitTokens(nz: Normalized, mode: TokenizeMode)(f: SpanEmitter): Unit = {
     val e = nz.length
     var nextIdx = 0
     var posCtr = -1 // token_cursor->pos starts at -1
@@ -204,7 +214,7 @@ final class NgramTokenizer(
             if (mode == TokenizeMode.Get) emit = false // skip, pos consumed
           } else if ((status & ReachEnd) != 0) forcePrefix = true
         }
-        if (emit) f(p, r, posCtr, forcePrefix)
+        if (emit) f.emit(p, r, posCtr, forcePrefix)
         if ((status & Last) != 0) done = true
         else if (mode == TokenizeMode.Get && (status & ReachEnd) != 0) done = true
         }
@@ -220,7 +230,7 @@ final class NgramTokenizer(
 final class DelimitTokenizer(val normalizer: String => Normalized) extends GTokenizer {
   def tokenizeNormalized(nz: Normalized, mode: TokenizeMode): Vector[Token] = {
     val out = Vector.newBuilder[Token]
-    emitTokens(nz) { (i, end, pos) =>
+    emitTokens(nz) { (i, end, pos, _) =>
       out += Token(nz.slice(i, end), pos, forcePrefix = false,
         nz.offsets(i), nz.endOffsets(end - 1))
     }
@@ -228,7 +238,7 @@ final class DelimitTokenizer(val normalizer: String => Normalized) extends GToke
   }
 
   override def tokenizeAddNormalized(nz: Normalized, sink: AddSink): Unit =
-    emitTokens(nz)((i, end, pos) => sink.acceptSpan(i, end, pos))
+    emitTokens(nz)((i, end, pos, _) => sink.acceptSpan(i, end, pos))
 
   /** U+FFFE pre-tokenized content: each non-empty delimiter-separated
     * segment is ONE whole token with interior blanks KEPT — the fixture's
@@ -260,7 +270,7 @@ final class DelimitTokenizer(val normalizer: String => Normalized) extends GToke
       out.result()
     }
 
-  private def emitTokens(nz: Normalized)(f: (Int, Int, Int) => Unit): Unit = {
+  private def emitTokens(nz: Normalized)(f: SpanEmitter): Unit = {
     val e = nz.length
     var i = 0
     var pos = 0
@@ -274,7 +284,7 @@ final class DelimitTokenizer(val normalizer: String => Normalized) extends GToke
       val end = if (stop) j else e
       // drop tokens over the 4096-byte lexicon key cap, no position consumed
       if (!(end - i > 1024 && Tokenizers.utf8Bytes(nz, i, end) > 4096)) {
-        f(i, end, pos)
+        f.emit(i, end, pos, false)
         pos += 1
       }
       i = end

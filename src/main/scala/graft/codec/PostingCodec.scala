@@ -149,12 +149,9 @@ object PostingCodec {
     val r = new Varint.Reader(b.data, 1)
     val n = r.readInt()
     val docIds = new Array[Long](n)
-    var prev = b.firstDoc
-    var i = 0
-    while (i < n) { prev += r.read(); docIds(i) = prev; i += 1 }
     val tfs = new Array[Int](n)
-    i = 0
-    while (i < n) { tfs(i) = r.readInt() + 1; i += 1 }
+    readDocTfs(r, b.firstDoc, n, docIds, tfs, 0)
+    var i = 0
     val ws = if (hasW) { val a = new Array[Int](n); i = 0; while (i < n) { a(i) = r.readInt(); i += 1 }; a } else null
     val out = new Array[Posting](n)
     i = 0
@@ -171,6 +168,28 @@ object PostingCodec {
       i += 1
     }
     out
+  }
+
+  /** Decode only the docIds and tfs of one block's payload into `docIds`
+    * and `tfs` from index `off`, with no [[Posting]] per entry; weights and
+    * positions stay unread. Returns the block's posting count.
+    */
+  def decodeDocTfs(data: Array[Byte], firstDoc: Long, docIds: Array[Long], tfs: Array[Int],
+      off: Int): Int = {
+    val r = new Varint.Reader(data, 1)
+    val n = r.readInt()
+    readDocTfs(r, firstDoc, n, docIds, tfs, off)
+    n
+  }
+
+  // the docId-delta and tf streams, which every payload starts with
+  private def readDocTfs(r: Varint.Reader, firstDoc: Long, n: Int, docIds: Array[Long],
+      tfs: Array[Int], off: Int): Unit = {
+    var prev = firstDoc
+    var i = off
+    while (i < off + n) { prev += r.read(); docIds(i) = prev; i += 1 }
+    i = off
+    while (i < off + n) { tfs(i) = r.readInt() + 1; i += 1 }
   }
 
   def decode(blocks: Seq[PostingBlock], wantPositions: Boolean = true): Iterator[Posting] =

@@ -1,128 +1,158 @@
 package graft.search
 
-import graft.codec.{PostingCodec, PostingBlock}
-import graft.core.Posting
+import graft.codec.PostingCodec
 import graft.index.{IndexReader, SegmentRow}
 
-/** Shared posting-block decode memo: repeated walks over the same blocks
-  * (many queries of one batch within a shard task, or a serving node's
-  * repeated hot-term queries) reuse the first decode — the decode is the
-  * bandwidth-bound part of a hot-term walk. Identity-keyed on the
-  * in-memory block rows. Memory is BOUNDED: once `budgetPostings` decoded
-  * postings are retained (default 512k ≈ tens of MB), further blocks
-  * decode transiently like the uncached path — hot blocks are touched
-  * first, so the budget keeps exactly the re-decode-prone ones.
-  * Thread-safe: map access is synchronized, the decode itself runs outside
-  * the lock (two threads racing on a cold block decode twice; the first
-  * insert wins).
+/** One term's postings on one shard, decoded once for scoring: docIds and
+  * tfs in primitive arrays (no positions, no [[graft.core.Posting]] per
+  * entry), cut into the blocks whose headers bound WAND's scores. A
+  * single-salt term keeps its stored blocks; a salted (hot) term's sub-lists
+  * are merged by docId and re-blocked at [[PostingCodec.BlockSize]], the
+  * blocks [[PostingCodec.encode]] would write for the merged list — so block
+  * bounds, and WAND's pruning, are those of the stored index. Immutable once
+  * built: any number of cursors, on any threads, walk one list.
+  *
+  * @param blockEnd   exclusive end index of each block in docIds/tfs
+  * @param blockLast  last docId of each block (the skip key)
+  * @param blockMaxTf largest tf of each block (the block-max bound)
   */
-final class DecodeCache(budgetPostings: Long = 512 * 1024L) {
-  private val m = new java.util.IdentityHashMap[PostingBlock, Array[Posting]]()
-  private var retained = 0L
-  def get(b: PostingBlock): Array[Posting] = {
-    var v = synchronized { m.get(b) }
-    if (v == null) {
-      v = PostingCodec.decodeBlock(b, wantPositions = false)
-      synchronized {
-        val prev = m.get(b)
-        if (prev != null) v = prev
-        else if (retained + v.length <= budgetPostings) {
-          m.put(b, v)
-          retained += v.length
-        }
+final class PostingList private (
+    val docIds: Array[Long],
+    val tfs: Array[Int],
+    val blockEnd: Array[Int],
+    val blockLast: Array[Long],
+    val blockMaxTf: Array[Int]
+) {
+  /** Max of blockMaxTf over blocks i.. — a cursor's remaining bound in O(1). */
+  val suffixMaxTf: Array[Int] = {
+    val a = new Array[Int](blockMaxTf.length)
+    var m = 0
+    var i = a.length - 1
+    while (i >= 0) { m = math.max(m, blockMaxTf(i)); a(i) = m; i -= 1 }
+    a
+  }
+
+  def size: Int = docIds.length
+  def numBlocks: Int = blockEnd.length
+  def blockStart(i: Int): Int = if (i == 0) 0 else blockEnd(i - 1)
+
+  /** Bytes of the arrays, the figure a cache budget charges for this list. */
+  def bytes: Long = PostingList.BytesPerPosting * size + PostingList.BytesPerBlock * numBlocks
+}
+
+object PostingList {
+  /** docId (8) + tf (4). */
+  val BytesPerPosting = 12L
+
+  /** blockEnd (4) + blockLast (8) + blockMaxTf (4) + suffixMaxTf (4). */
+  val BytesPerBlock = 20L
+
+  /** The list of one (shard, term) from its segment rows, one per salt. */
+  def of(rows: Seq[SegmentRow]): PostingList =
+    if (rows.size == 1) stored(rows.head) else merged(rows)
+
+  private def decodeRow(r: SegmentRow): (Array[Long], Array[Int]) = {
+    val n = r.blocks.iterator.map(_.n).sum
+    val ids = new Array[Long](n)
+    val tfs = new Array[Int](n)
+    var off = 0
+    r.blocks.foreach(b => off += PostingCodec.decodeDocTfs(b.data, b.firstDoc, ids, tfs, off))
+    (ids, tfs)
+  }
+
+  private def stored(r: SegmentRow): PostingList = {
+    val (ids, tfs) = decodeRow(r)
+    val bs = r.blocks.toArray
+    new PostingList(ids, tfs, bs.map(_.n).scanLeft(0)(_ + _).tail, bs.map(_.lastDoc), bs.map(_.maxTf))
+  }
+
+  // k-way merge of the salts' docId-ascending runs (equal docIds keep row
+  // order, as Searcher.mergeSalts's stable sort does), then fixed-size blocks
+  private def merged(rows: Seq[SegmentRow]): PostingList = {
+    val runs = rows.map(decodeRow).toArray
+    val runIds = runs.map(_._1)
+    val runTfs = runs.map(_._2)
+    val at = new Array[Int](runs.length)
+    val n = runIds.map(_.length).sum
+    val ids = new Array[Long](n)
+    val tfs = new Array[Int](n)
+    var o = 0
+    while (o < n) {
+      var best = -1
+      var r = 0
+      while (r < runIds.length) {
+        if (at(r) < runIds(r).length && (best < 0 || runIds(r)(at(r)) < runIds(best)(at(best)))) best = r
+        r += 1
       }
+      ids(o) = runIds(best)(at(best))
+      tfs(o) = runTfs(best)(at(best))
+      at(best) += 1
+      o += 1
     }
-    v
+    val nb = (n + PostingCodec.BlockSize - 1) / PostingCodec.BlockSize
+    val end = Array.tabulate(nb)(b => math.min(n, (b + 1) * PostingCodec.BlockSize))
+    val maxTf = Array.tabulate(nb) { b =>
+      var m = 0
+      var i = b * PostingCodec.BlockSize
+      while (i < end(b)) { m = math.max(m, tfs(i)); i += 1 }
+      m
+    }
+    new PostingList(ids, tfs, end, end.map(e => ids(e - 1)), maxTf)
   }
 }
 
-/** A per-term posting cursor over one shard with block-level skipping —
-  * blocks decode lazily; firstDoc/lastDoc/maxTf headers drive both skips and
+/** A per-term posting cursor over one shard's [[PostingList]] with
+  * block-level skipping: lastDoc headers drive skips and maxTf headers the
   * block-max score bounds (the chunk/dgap role of reference lib/ii.c:2659,
-  * cursor chunk-skipping lib/ii.c:4182-4212). Scoring reads only docIds
-  * and tf, so blocks decode without their positions.
+  * cursor chunk-skipping lib/ii.c:4182-4212). The list is decoded already,
+  * so the walk reads array slots and allocates nothing.
   *
   * @param termIdx stable index of this term in the query — doc scores are
   *                summed in termIdx order in every execution path so WAND and
   *                exhaustive produce bit-identical floats (rank-identity)
   */
 final class TermCursor(
-    val blocks: Array[PostingBlock],
+    list: PostingList,
     val termIdx: Int,
     val idfWeight: Double,
-    bm25: Bm25,
-    cache: DecodeCache = null
+    bm25: Bm25
 ) {
-  private var blockIdx = 0
-  // postings of blocks(blockIdx), decoded on first need: on a block's first
-  // posting the docId is the header's firstDoc, so pivot selection, a
-  // whole-shard skip and an advanceTo landing on a block start decode nothing
-  private var decoded: Array[Posting] = _
-  private var inBlock = 0
-  // suffix max of block maxTf → O(1) remaining-upper-bound
-  private val suffixMaxTf: Array[Int] = {
-    val a = new Array[Int](blocks.length)
-    var m = 0
-    var i = blocks.length - 1
-    while (i >= 0) { m = math.max(m, blocks(i).maxTf); a(i) = m; i -= 1 }
-    a
-  }
+  private val docIds = list.docIds
+  private var i = 0 // current posting
+  private var blockIdx = 0 // the block holding posting i
 
-  private def block: Array[Posting] = {
-    if (decoded == null)
-      decoded =
-        if (cache == null) PostingCodec.decodeBlock(blocks(blockIdx), wantPositions = false)
-        else cache.get(blocks(blockIdx))
-    decoded
-  }
-
-  private def enterBlock(i: Int): Unit = { blockIdx = i; decoded = null; inBlock = 0 }
-
-  def exhausted: Boolean = blockIdx >= blocks.length
-  def curDoc: Long = if (inBlock == 0) blocks(blockIdx).firstDoc else block(inBlock).docId
-  def curTf: Int = block(inBlock).tf
+  def exhausted: Boolean = i >= docIds.length
+  def curDoc: Long = docIds(i)
+  def curTf: Int = list.tfs(i)
 
   /** Max possible contribution from the current position onward. */
   def remainingUb: Double =
-    if (exhausted) 0.0 else idfWeight * bm25.tfNormUb(suffixMaxTf(blockIdx))
+    if (exhausted) 0.0 else idfWeight * bm25.tfNormUb(list.suffixMaxTf(blockIdx))
 
   /** Tighter bound using only the current block (block-max WAND check). */
   def curBlockUb: Double =
-    if (exhausted) 0.0 else idfWeight * bm25.tfNormUb(blocks(blockIdx).maxTf)
+    if (exhausted) 0.0 else idfWeight * bm25.tfNormUb(list.blockMaxTf(blockIdx))
 
   def next(): Unit = {
-    inBlock += 1
-    if (inBlock >= blocks(blockIdx).n) enterBlock(blockIdx + 1)
+    i += 1
+    if (i >= list.blockEnd(blockIdx)) blockIdx += 1
   }
 
   def advanceTo(target: Long): Unit = {
-    if (exhausted || curDoc >= target) return
-    if (blocks(blockIdx).lastDoc < target) {
-      // skip whole blocks on lastDoc headers — no decode
-      var i = blockIdx
-      while (i < blocks.length && blocks(i).lastDoc < target) i += 1
-      enterBlock(i)
-      if (exhausted || blocks(i).firstDoc >= target) return
+    if (exhausted || docIds(i) >= target) return
+    var a = i
+    if (list.blockLast(blockIdx) < target) {
+      // skip whole blocks on lastDoc headers
+      var b = blockIdx
+      while (b < list.numBlocks && list.blockLast(b) < target) b += 1
+      blockIdx = b
+      if (b == list.numBlocks) { i = docIds.length; return }
+      a = list.blockStart(b)
     }
-    val d = block
-    var a = inBlock
-    var b = d.length
-    while (a < b) { val m = (a + b) >>> 1; if (d(m).docId < target) a = m + 1 else b = m }
-    inBlock = a // guaranteed < length because lastDoc >= target
+    var z = list.blockEnd(blockIdx)
+    while (a < z) { val m = (a + z) >>> 1; if (docIds(m) < target) a = m + 1 else z = m }
+    i = a // < blockEnd because the block's lastDoc >= target
   }
-}
-
-object TermCursor {
-  /** Merge a term's (possibly salted) segment rows into one rid-ascending
-    * block list. Salted (hot) sub-lists interleave docIds, so they are
-    * merged and re-blocked — block skip metadata stays exact. Hoist this per
-    * (shard, term) when serving a query batch — the decode+sort+re-encode
-    * of a hot term is paid once, not per query. Cursors never read
-    * positions, so the merge drops them.
-    */
-  def mergedBlocks(rows: Seq[SegmentRow]): Array[PostingBlock] =
-    if (rows.size == 1) rows.head.blocks.map(_.toBlock).toArray
-    else PostingCodec.encode(Searcher.mergeSalts(rows, false).iterator, false)._1.toArray
 }
 
 /** One query's BM25 set-up, shared by the distributed, batch and local
@@ -132,12 +162,11 @@ object TermCursor {
   */
 final case class Bm25Plan(
     terms: Seq[String], df: Map[String, Long], numDocs: Long, avgdl: Double, bm25: Bm25) {
-  val termIdx: Map[String, Int] = terms.zipWithIndex.toMap
-  val idf: Map[String, Double] = terms.map(t => t -> bm25.idf(numDocs, df(t))).toMap
+  private val idf: Array[Double] = terms.map(t => bm25.idf(numDocs, df(t))).toArray
 
-  /** A cursor over one shard's (merged) blocks of `term`. */
-  def cursor(term: String, blocks: Array[PostingBlock], cache: DecodeCache = null): TermCursor =
-    new TermCursor(blocks, termIdx(term), idf(term), bm25, cache)
+  /** A cursor over one shard's list of `terms(termIdx)`. */
+  def cursor(termIdx: Int, list: PostingList): TermCursor =
+    new TermCursor(list, termIdx, idf(termIdx), bm25)
 }
 
 object Bm25Plan {
@@ -210,7 +239,7 @@ object Bm25Shard {
   }
 
   def exhaustive(
-      cursors: Seq[TermCursor],
+      cursors: scala.collection.Seq[TermCursor],
       docLen: Long => Int,
       plan: Bm25Plan,
       top: TopK,
@@ -240,7 +269,7 @@ object Bm25Shard {
     * instead of scored (measured gain: see [[LocalServing]]).
     */
   def wand(
-      cursors0: Seq[TermCursor],
+      cursors0: scala.collection.Seq[TermCursor],
       docLen: Long => Int,
       plan: Bm25Plan,
       top: TopK,

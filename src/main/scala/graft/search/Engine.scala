@@ -315,18 +315,15 @@ object Engine {
     val kLocal = k
     val score: (Seq[SegmentRow], Array[Byte]) => Iterator[(Long, Long, Double)] = {
       (segRows, normsBlob) =>
-        // merge salted sub-lists ONCE per (shard, term) — shared by every
-        // query in the batch (hot terms are exactly the ones many queries hit)
-        val byTerm: Map[String, Array[graft.codec.PostingBlock]] =
-          segRows.groupBy(_.term)
-            .map { case (t, rows) => t -> TermCursor.mergedBlocks(rows) }
+        // decode (and salt-merge) each (shard, term) list ONCE, shared by
+        // every query in the batch (hot terms are exactly the ones many
+        // queries hit)
+        val byTerm: Map[String, PostingList] =
+          segRows.groupBy(_.term).map { case (t, rows) => t -> PostingList.of(rows) }
         val lookup = Norms.decode(normsBlob)
-        // one decode memo for the whole batch: every query that walks a hot
-        // term's block reuses the first decode instead of re-paying it
-        val decodeCache = new DecodeCache()
         plansB.value.iterator.flatMap { case (qid, plan) =>
-          val cursors = plan.terms.flatMap { t =>
-            byTerm.get(t).map(blocks => plan.cursor(t, blocks, decodeCache))
+          val cursors = plan.terms.zipWithIndex.flatMap { case (t, i) =>
+            byTerm.get(t).map(plan.cursor(i, _))
           }
           if (cursors.isEmpty) Iterator.empty
           else {

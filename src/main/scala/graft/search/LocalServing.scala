@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.codec.{Norms, PostingBlock}
+import graft.codec.Norms
 import graft.index.IndexReader
 import org.apache.spark.sql.Dataset
 
@@ -27,16 +27,23 @@ import org.apache.spark.sql.Dataset
   * One top-k per query: all shards score into one [[Bm25Shard.TopK]], so
   * WAND's θ carries across shards, as over Groonga's single docid space: on
   * a hot+rare query, once k rare-term docs are held, later shards skip the
-  * hot postings. With [[TermCursor]]'s lazy, position-free block decode
-  * this took perfbench `serve_local` (16k files, 64 shards, 4-core host)
-  * from 0.86 to 0.42 ms open-loop p50 (median, 10 paired seeds) against one
-  * heap per shard and eager decode; traced hot+rare p50 2.7 -> 0.6 ms.
+  * hot postings.
+  *
+  * The cache holds decoded lists: per term, one [[PostingList]] per shard,
+  * decoded and salt-merged once at fetch. A warm query decodes nothing and
+  * allocates no posting; its cursors walk primitive arrays. Against caching
+  * the encoded blocks and decoding them on every query, perfbench
+  * `serve_local` (16k files, 64 shards, 4-core host, 10 paired seeds) went
+  * from 29.7k to 45.4k queries/s closed loop and from 0.134 to 0.103 ms
+  * open-loop p50 (medians); the cache holds about twice the bytes.
   *
   * A LocalServing instance is bound to one reader snapshot — rebuild or
   * compaction means a new reader and a new instance (same epoch discipline
   * as the select result cache).
   *
-  * @param maxCachedBytes LRU budget over encoded posting bytes (default 256 MiB)
+  * @param maxCachedBytes LRU budget over decoded postings, each list charged
+  *                       [[PostingList.bytes]]: 12 bytes per posting plus
+  *                       20 per block (default 256 MiB)
   */
 final class LocalServing(
     val reader: IndexReader,
@@ -44,8 +51,15 @@ final class LocalServing(
 ) {
   require(maxCachedBytes > 0, "maxCachedBytes must be positive")
 
-  /** Cached postings of one term: per-shard merged (salt-combined) blocks. */
-  private final class Entry(val perShard: Array[(Int, Array[PostingBlock])], val bytes: Long)
+  private val nShards = reader.manifest.nShards
+
+  /** Cached postings of one term: its decoded list on each shard, indexed by
+    * shard id (null where the shard holds none of it).
+    */
+  private final class Entry(val byShard: Array[PostingList]) {
+    val bytes: Long = byShard.iterator.filter(_ != null).map(_.bytes).sum
+  }
+  private val noPostings = new Entry(new Array[PostingList](nShards))
 
   private val cache = new java.util.LinkedHashMap[String, Entry](64, 0.75f, true)
   private var cachedBytes = 0L
@@ -53,11 +67,11 @@ final class LocalServing(
   private val missCount = new java.util.concurrent.atomic.AtomicLong
   private val fallbackCount = new java.util.concurrent.atomic.AtomicLong
   private val docsScoredCount = new java.util.concurrent.atomic.AtomicLong
-  // terms whose REAL encoded bytes exceed the whole budget (the df-based
-  // pre-estimate can undershoot with positions on): never cached — caching
-  // one would wipe every warm entry and still end in a fallback — and
-  // remembered so later queries skip straight to the distributed path
-  // instead of refetching
+  // terms whose decoded bytes exceed the whole budget (the df-based
+  // pre-estimate undershoots lists cut into many short blocks): never
+  // cached — caching one would wipe every warm entry and still end in a
+  // fallback — and remembered so later queries skip straight to the
+  // distributed path instead of refetching
   private val oversized = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   def hits: Long = hitCount.get
@@ -67,7 +81,7 @@ final class LocalServing(
   /** Documents the WAND kernel evaluated locally (fallbacks not counted). */
   def docsScored: Long = docsScoredCount.get
 
-  /** Postings bytes currently cached (LRU occupancy). */
+  /** Decoded postings bytes currently cached (LRU occupancy). */
   def cachedBytesNow: Long = synchronized { cachedBytes }
 
   /** Terms permanently routed to the distributed path (postings > budget). */
@@ -83,20 +97,27 @@ final class LocalServing(
       .toDF("hits", "misses", "fallbacks", "cached_bytes", "oversized_terms")
   }
 
-  /** ~bytes per posting for the pre-fetch budget check (delta-varint docId +
-    * varint tf; positions add more, so this under-estimate only errs toward
-    * allowing a fetch the LRU then bounds anyway).
+  /** Bytes per posting for the pre-fetch budget check: a decoded list's
+    * [[PostingList.bytes]], with its per-block arrays (20 bytes per 128
+    * postings) rounded up to one byte per posting.
     */
-  private val estBytesPerPosting = 6L
+  private val estBytesPerPosting = PostingList.BytesPerPosting + 1
 
   /** Per-shard decoded norms, built once per shard on first use — decoding
     * the varint blob per query would dominate the postings walk. One int
     * per doc of the shard: the same footprint the executor-side broadcast
     * already pays, held once per serving process.
     */
-  private val normsCache = new java.util.concurrent.ConcurrentHashMap[Int, Norms.Lookup]()
-  private def normsFor(shard: Int): Norms.Lookup =
-    normsCache.computeIfAbsent(shard, sh => Norms.decode(reader.normsBroadcast.value(sh)))
+  private val normsCache = new java.util.concurrent.atomic.AtomicReferenceArray[Norms.Lookup](nShards)
+  private def normsFor(shard: Int): Norms.Lookup = {
+    var n = normsCache.get(shard)
+    if (n == null) {
+      // two threads racing on a cold shard both decode; either result is right
+      n = Norms.decode(reader.normsBroadcast.value(shard))
+      normsCache.set(shard, n)
+    }
+    n
+  }
 
   private def evictTo(budget: Long): Unit = {
     val it = cache.entrySet().iterator()
@@ -115,13 +136,13 @@ final class LocalServing(
     */
   private def postingsFor(
       terms: Seq[String],
-      dfs: Map[String, Long]): Option[Map[String, Array[(Int, Array[PostingBlock])]]] = {
+      dfs: Map[String, Long]): Option[Array[Entry]] = {
     if (terms.exists(oversized.contains)) { fallbackCount.incrementAndGet(); return None }
     val missing = synchronized { terms.filterNot(cache.containsKey) }
     val estMissing = missing.map(t => dfs.getOrElse(t, 0L) * estBytesPerPosting).sum
     if (estMissing > maxCachedBytes) { fallbackCount.incrementAndGet(); return None }
 
-    // fetch + decode-merge outside the lock; two threads racing on the same
+    // fetch + decode outside the lock; two threads racing on the same
     // term fetch twice and the second insert is a no-op — correct, and far
     // cheaper than serializing all hits behind the job
     val fetched: Seq[(String, Entry)] =
@@ -129,14 +150,12 @@ final class LocalServing(
       else {
         missCount.addAndGet(missing.size.toLong)
         val rows = reader.segmentsFor(missing).collect()
+        val byTerm = rows.groupBy(_.term)
         missing.map { t =>
-          val mine = rows.filter(_.term == t)
-          val perShard = mine.groupBy(_.shard).toArray.map { case (sh, rs) =>
-            sh -> TermCursor.mergedBlocks(rs.toSeq)
-          }
-          val bytes = perShard.iterator
-            .flatMap(_._2.iterator).map(_.data.length.toLong).sum
-          t -> new Entry(perShard, bytes)
+          val byShard = new Array[PostingList](nShards)
+          byTerm.getOrElse(t, Array.empty[graft.index.SegmentRow]).groupBy(_.shard)
+            .foreach { case (sh, rs) => byShard(sh) = PostingList.of(rs.toSeq) }
+          t -> new Entry(byShard)
         }
       }
 
@@ -149,14 +168,15 @@ final class LocalServing(
         }
       }
       evictTo(maxCachedBytes)
-      val got = terms.flatMap { t =>
-        Option(cache.get(t)).map(e => t -> e.perShard)
-      }.toMap
+      val got = terms.map { t =>
+        val e = cache.get(t)
+        // a term with no postings needs no entry
+        if (e == null && dfs.getOrElse(t, 0L) == 0L) noPostings else e
+      }.toArray
       hitCount.addAndGet((terms.size - missing.size).toLong)
       // a term can be oversized, or evicted by a same-call sibling before
       // read-back; serve the distributed path rather than partial data
-      val incomplete = terms.exists(t => dfs.getOrElse(t, 0L) > 0L && !got.contains(t))
-      if (incomplete) { fallbackCount.incrementAndGet(); None } else Some(got)
+      if (got.contains(null)) { fallbackCount.incrementAndGet(); None } else Some(got)
     }
   }
 
@@ -173,13 +193,21 @@ final class LocalServing(
         // distributed fallback: same kernel, cluster-side
         Engine.bm25TopK(reader, text, k, useWand = true, bm25 = bm25)
           .collect().toSeq.sorted(Bm25Shard.resultOrdering)
-      case Some(byTerm) =>
+      case Some(entries) =>
         val deleted = reader.deletedIds
-        val cursors = for ((t, perShard) <- byTerm.toSeq; (sh, blocks) <- perShard)
-          yield sh -> plan.cursor(t, blocks)
         val top = new Bm25Shard.TopK(k)
-        cursors.groupMap(_._1)(_._2).toSeq.sortBy(_._1).foreach { case (sh, cs) =>
-          Bm25Shard.wand(cs, normsFor(sh).apply, plan, top, deleted)
+        val cursors = new scala.collection.mutable.ArrayBuffer[TermCursor](entries.length)
+        var sh = 0
+        while (sh < nShards) {
+          cursors.clear()
+          var t = 0
+          while (t < entries.length) {
+            val list = entries(t).byShard(sh)
+            if (list != null) cursors += plan.cursor(t, list)
+            t += 1
+          }
+          if (cursors.nonEmpty) Bm25Shard.wand(cursors, normsFor(sh).apply, plan, top, deleted)
+          sh += 1
         }
         docsScoredCount.addAndGet(top.scored)
         top.result

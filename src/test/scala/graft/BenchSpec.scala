@@ -66,4 +66,16 @@ class BenchSpec extends AnyFunSuite {
       assert(Bench.json(Bench.fixed(v, d)) == s"%.${d}f".formatLocal(java.util.Locale.ROOT, v), s"$v, $d")
     assert(Bench.json(Seq(Bench.fixed(Double.NaN, 1))) == "[null]")
   }
+
+  test("per-round levels: distinct levels run once, coinciding levels report no efficiency") {
+    assert(Bench.levels(4) == ((4, 1, 1)))
+    assert(Bench.levels(8) == ((8, 2, 1)))
+    assert(Bench.levels(32) == ((32, 8, 2)))
+    val (c, n, nn) = Bench.levels(4)
+    assert(Seq(c, n, nn).distinct == Seq(4, 1))
+    assert(Bench.json(Seq(Bench.fixed(Bench.efficiency(900.0, 500.0, n, nn), 3))) == "[null]")
+    assert(Bench.json(Seq(Bench.fixed(Bench.efficiency(1800.0, 500.0, c, n), 3))) == "[0.900]")
+    val (_, n8, nn8) = Bench.levels(8)
+    assert(Bench.json(Seq(Bench.fixed(Bench.efficiency(1500.0, 500.0, n8, nn8), 3))) == "[1.500]")
+  }
 }

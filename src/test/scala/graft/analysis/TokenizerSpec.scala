@@ -130,4 +130,26 @@ class TokenizerSpec extends AnyFunSuite {
     assert(posed(delimit.tokenizeEnabled("a b", Add)) ==
       posed(delimit.tokenize("a b", Add)))
   }
+
+  test("Add-mode tokenize into an AddSink allocates nothing per token") {
+    final class Counting extends AddSink {
+      var n = 0L
+      def acceptSpan(start: Int, endEx: Int, pos: Int): Unit = n += 1
+      def acceptTerm(term: String, pos: Int): Unit = n += 1
+    }
+    val doc = (0 until 700).map(i => s"def f$i(x) = x + $i // 検索エンジン").mkString("\n")
+    val bean = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    for (tok <- Seq(bigram, delimit)) {
+      val nz = tok.normalizer(doc)
+      val sink = new Counting
+      (1 to 300).foreach(_ => tok.tokenizeAddNormalized(nz, sink)) // JIT warm-up
+      sink.n = 0
+      val before = bean.getCurrentThreadAllocatedBytes
+      tok.tokenizeAddNormalized(nz, sink)
+      val allocated = bean.getCurrentThreadAllocatedBytes - before
+      if (tok eq bigram) assert(sink.n >= 10000, s"${sink.n} tokens")
+      assert(allocated < 1024, s"$allocated bytes for ${sink.n} tokens")
+    }
+  }
 }

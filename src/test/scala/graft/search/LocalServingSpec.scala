@@ -66,6 +66,21 @@ class LocalServingSpec extends AnyFunSuite {
     }
   }
 
+  test("the LRU charges decoded bytes and stays within a budget that holds one term") {
+    val reader = new IndexReader(spark, dir)
+    // "alpha" is in all 120 docs: 30 postings, one block, on each of 4 shards
+    val alphaBytes = 120 * PostingList.BytesPerPosting + 4 * PostingList.BytesPerBlock
+    val budget = 2000L
+    val ls = new LocalServing(reader, maxCachedBytes = budget)
+    assert(ls.bm25TopK("alpha", 10) == distributed(reader, "alpha", 10))
+    assert(ls.cachedBytesNow == alphaBytes)
+    for (q <- Seq("beta", "mango", "gamma", "kiwi", "alpha", "word7", "beta", "mango")) {
+      assert(ls.bm25TopK(q, 10) == distributed(reader, q, 10), s"mismatch for <$q>")
+      assert(ls.cachedBytesNow <= budget, s"after <$q>")
+      assert(ls.fallbacks == 0, s"after <$q>")
+    }
+  }
+
   test("unknown terms and empty queries return empty") {
     val reader = new IndexReader(spark, dir)
     val ls = new LocalServing(reader)
