@@ -7,7 +7,8 @@
 #   scripts/bench_java.sh submit [nFiles] [reps]           no master (see
 #                                                          run_spark_submit.sh)
 #
-# GRAFT_MAIN runs another main on the same classpath (e.g. graft.tools.QueryTime).
+# GRAFT_MAIN runs another main on the same classpath (default graft.Bench,
+# whose modes above time the queries: e.g. `scripts/bench_java.sh scaling`).
 set -e
 cd "$(dirname "$0")/.."
 ADD_OPENS=""

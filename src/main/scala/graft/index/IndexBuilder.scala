@@ -3,7 +3,7 @@ package graft.index
 import graft.analysis.{Tokenizers, TokenizeMode}
 import graft.codec.{PostingCodec, PostingBlock}
 import graft.core.{Posting, Sha256}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Build configuration.
@@ -142,9 +142,23 @@ object IndexManifest {
   */
 object IndexBuilder {
 
+  /** The shard of a row's docId, docId mod nShards: the one expression every
+    * stage shards by (the norms pass reads the docs stage's column).
+    */
+  private def shardOf(nShards: Int): Column = pmod(col("docId"), lit(nShards)).cast("int")
+
+  // the docs stage's min(docId) Observation (null on an empty corpus)
+  private def requireNonNegativeIds(minDocId: Any): Unit = minDocId match {
+    case v: Number if v.longValue < 0 =>
+      throw new IllegalArgumentException(s"docId must be >= 0, got $v")
+    case _ =>
+  }
+
   /** Input contract: columns (docId: Long, content: String) plus pass-through
-    * metadata columns. docId must be unique; use [[assignDocIds]] when the
-    * source has no id.
+    * metadata columns. docId must be unique and ≥ 0 (the norms encode it as
+    * a varint); use [[assignDocIds]] when the source has no id. A negative
+    * docId fails the docs stage with an IllegalArgumentException, before any
+    * later stage runs.
     */
   def build(spark: SparkSession, docsIn: DataFrame, dir: String, cfg: IndexConfig): IndexManifest = {
     import spark.implicits._
@@ -169,12 +183,12 @@ object IndexBuilder {
     // ---- stage 1: docs (sha256 invariant, shard assignment) -------------
     // No tokenization here — the norms stage counts doclen in its own pass
     // through DocCombiner.tokenize, the postings pass's tokenization, so it
-    // equals the sum of tf per doc. Sharding is docId mod nShards: needs no corpus count (single
-    // pass over the input) and round-robins docs across shards, so shard
-    // sizes stay balanced whatever the docId distribution.
-    // numDocs and the sha digest are accumulated during this same pass (and
-    // recorded in the stage marker for resume) — the manifest step never
-    // re-reads the docs table.
+    // equals the sum of tf per doc. Sharding is docId mod nShards (shardOf):
+    // needs no corpus count (single pass over the input) and round-robins
+    // docs across shards, so shard sizes stay balanced whatever the docId
+    // distribution. numDocs, the sha digest and min(docId) are accumulated
+    // during this same pass (the first two recorded in the stage marker for
+    // resume) — the manifest step never re-reads the docs table.
     if (!stageDone("docs")) {
       // null content = empty document (the reference stores missing column
       // values as empty; tokenizing null yields no postings)
@@ -184,12 +198,14 @@ object IndexBuilder {
       val obs = org.apache.spark.sql.Observation("docStats")
       docsIn
         .withColumn("sha256", shaUdf(col("content")))
-        .withColumn("shard", pmod(col("docId"), lit(cfg.nShards)).cast("int"))
+        .withColumn("shard", shardOf(cfg.nShards))
         .observe(obs,
           count(lit(1)).as("n"),
-          sum(conv(substring(col("sha256"), 1, 8), 16, 10).cast("long")).as("shaSum"))
+          sum(conv(substring(col("sha256"), 1, 8), 16, 10).cast("long")).as("shaSum"),
+          min(col("docId")).as("minDocId"))
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/docs")
       val m = obs.get
+      requireNonNegativeIds(m("minDocId"))
       // empty corpus: the sha sum Observation is null — record 0
       val shaOut = m("shaSum") match { case null => 0L; case v => v }
       markDone("docs", s"${m("n")} $shaOut")
@@ -267,10 +283,10 @@ object IndexBuilder {
 
       // norms sidecar: doclen per doc, computed by a dedicated counting pass
       // (tokenize only — no combine, no posting rows, no shuffle of
-      // postings; ~one int row per doc reaches the tiny by-shard shuffle)
+      // postings; ~one int row per doc reaches the tiny by-shard shuffle),
+      // keyed by the shard the docs stage stored
       if (!stageDone("norms")) {
-        val nShardsL = cfg.nShards
-        docs.select("docId", "content").as[(Long, String)]
+        docs.select("shard", "docId", "content").as[(Int, Long, String)]
           .mapPartitions { iter =>
             val tok = Tokenizers.byName(tokName)
             val scratch = new graft.analysis.Normalizer.Scratch
@@ -279,11 +295,11 @@ object IndexBuilder {
               def acceptSpan(s: Int, e: Int, p: Int): Unit = n += 1
               def acceptTerm(t: String, p: Int): Unit = n += 1
             }
-            iter.map { case (docId, content) =>
+            iter.map { case (shard, docId, content) =>
               counter.n = 0
               // the postings pass's tokenization, so doclen = Σ tf
               if (content != null) DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
-              ((docId % nShardsL).toInt, docId, counter.n)
+              (shard, docId, counter.n)
             }
           }
           .groupByKey(_._1)
@@ -361,7 +377,7 @@ object IndexBuilder {
       else 0
     }
     val keyed = postingsW
-      .withColumn("shard", pmod(col("docId"), lit(cfg.nShards)).cast("int"))
+      .withColumn("shard", shardOf(cfg.nShards))
       .withColumn("salt", saltUdf(col("term"), col("docId")))
       .repartition(cfg.buildPartitions, col("term"), col("shard"), col("salt"))
       .sortWithinPartitions("term", "shard", "salt", "docId")
@@ -454,12 +470,14 @@ object IndexBuilder {
     val obs = org.apache.spark.sql.Observation(s"docStats_${System.identityHashCode(postingsIn)}")
     docsMeta
       .withColumn("sha256", shaUdf(to_json(struct(docsMeta.columns.map(col).toSeq: _*))))
-      .withColumn("shard", pmod(col("docId"), lit(cfg.nShards)).cast("int"))
+      .withColumn("shard", shardOf(cfg.nShards))
       .observe(obs,
         count(lit(1)).as("n"),
-        sum(conv(substring(col("sha256"), 1, 8), 16, 10).cast("long")).as("shaSum"))
+        sum(conv(substring(col("sha256"), 1, 8), 16, 10).cast("long")).as("shaSum"),
+        min(col("docId")).as("minDocId"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/docs")
     val m = obs.get
+    requireNonNegativeIds(m("minDocId"))
     val numDocs = m("n").asInstanceOf[Long]
     val shaSum = m("shaSum") match { case null => 0L; case v => v.asInstanceOf[Long] }
 
@@ -475,7 +493,7 @@ object IndexBuilder {
 
     // norms from the postings (doclen = Σ tf per doc)
     postings
-      .withColumn("shard", pmod(col("docId"), lit(cfg.nShards)).cast("int"))
+      .withColumn("shard", shardOf(cfg.nShards))
       .groupBy("shard", "docId").agg(sum("tf").cast("int").as("doclen"))
       .as[(Int, Long, Int)]
       .groupByKey(_._1)

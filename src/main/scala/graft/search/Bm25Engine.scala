@@ -89,11 +89,21 @@ object PostingList {
       at(best) += 1
       o += 1
     }
-    val nb = (n + PostingCodec.BlockSize - 1) / PostingCodec.BlockSize
-    val end = Array.tabulate(nb)(b => math.min(n, (b + 1) * PostingCodec.BlockSize))
+    blocked(ids, tfs)
+  }
+
+  /** The list of docId-ascending `ids` and their `tfs`, cut into blocks of
+    * `blockSize` — at [[PostingCodec.BlockSize]], the blocks
+    * [[PostingCodec.encode]] writes.
+    */
+  private[search] def blocked(ids: Array[Long], tfs: Array[Int],
+      blockSize: Int = PostingCodec.BlockSize): PostingList = {
+    val n = ids.length
+    val nb = (n + blockSize - 1) / blockSize
+    val end = Array.tabulate(nb)(b => math.min(n, (b + 1) * blockSize))
     val maxTf = Array.tabulate(nb) { b =>
       var m = 0
-      var i = b * PostingCodec.BlockSize
+      var i = b * blockSize
       while (i < end(b)) { m = math.max(m, tfs(i)); i += 1 }
       m
     }
@@ -164,6 +174,16 @@ final case class Bm25Plan(
     terms: Seq[String], df: Map[String, Long], numDocs: Long, avgdl: Double, bm25: Bm25) {
   private val idf: Array[Double] = terms.map(t => bm25.idf(numDocs, df(t))).toArray
 
+  /** termIdx of the seed term of [[Bm25Shard.scoreSeed]]: the smallest df
+    * among the terms with postings (the lowest termIdx on a tie), or −1 when
+    * fewer than two terms have postings — a single-term query has no
+    * threshold to raise before its own walk.
+    */
+  val seed: Int = {
+    val withPostings = terms.indices.filter(t => df(terms(t)) > 0)
+    if (withPostings.size < 2) -1 else withPostings.minBy(t => df(terms(t)))
+  }
+
   /** A cursor over one shard's list of `terms(termIdx)`. */
   def cursor(termIdx: Int, list: PostingList): TermCursor =
     new TermCursor(list, termIdx, idf(termIdx), bm25)
@@ -191,11 +211,23 @@ object Bm25Plan {
 }
 
 /** Disjunctive top-k BM25 over one shard: exhaustive term-at-a-time (the
-  * rank-identity oracle) and document-at-a-time block-max WAND (the scale
-  * path). Both score into a [[Bm25Shard.TopK]] the caller owns and sum
-  * per-doc contributions in termIdx order so floats are bit-identical; WAND
-  * prunes only when the upper bound is strictly below the current
-  * threshold, preserving score ties.
+  * rank-identity oracle) and document-at-a-time block-max WAND (Ding & Suel,
+  * SIGIR 2011), run in two phases (the scale path). Every path scores into a
+  * [[Bm25Shard.TopK]] the caller owns and sums per-doc contributions in
+  * termIdx order so floats are bit-identical; WAND prunes only when the
+  * upper bound is strictly below the current threshold, preserving score
+  * ties.
+  *
+  * The two phases seed WAND's threshold with exact scores (an exact initial
+  * threshold, Kane & Tompa, SIGIR 2018). Phase 1 ([[scoreSeed]]) offers
+  * every live document of the query's rarest term with its full score;
+  * phase 2 ([[scoreRest]]) runs WAND over the other terms only and skips the
+  * seed's documents as it skips tombstones. That is exact: a document with
+  * the seed term was offered once with every term's contribution, and any
+  * other document scores from the other terms alone, which WAND covers. On a
+  * hot+rare query θ is already the k-th rare-document score when the hot
+  * list's walk starts, so the hot postings are skipped rather than scored
+  * (measured: see [[LocalServing]]).
   */
 object Bm25Shard {
 
@@ -262,18 +294,85 @@ object Bm25Shard {
     while (it.hasNext) { val e = it.next(); top.offer(ScoredDoc(e.getKey, e.getValue)) }
   }
 
-  /** Block-max WAND over one shard's cursors, scoring into `top`. With a
-    * `top` shared across shards, a shard starts at the θ the shards before
-    * it reached, so a cursor whose bound is below θ — a hot term once k
-    * docs matching a rarer term are held — is skipped with `advanceTo`
-    * instead of scored (measured gain: see [[LocalServing]]).
+  /** Cursors over one shard's lists (indexed by termIdx, null where the
+    * shard holds none of that term), in termIdx order, leaving out `except`.
+    */
+  def cursors(lists: Array[PostingList], plan: Bm25Plan, except: Int = -1): Array[TermCursor] = {
+    val b = Array.newBuilder[TermCursor]
+    var t = 0
+    while (t < lists.length) {
+      if (t != except && lists(t) != null) b += plan.cursor(t, lists(t))
+      t += 1
+    }
+    b.result()
+  }
+
+  /** Phase 1: offer every live document of the seed term ([[Bm25Plan.seed]])
+    * on this shard with its exact score. The other terms' tfs come from their
+    * cursors' `advanceTo` (the seed's docIds ascend), summed in termIdx order
+    * as WAND's evaluate step sums them. No-op without a seed on the shard.
+    * `lists` holds the shard's list of each term by termIdx, null where the
+    * shard holds none. A walk over many shards into one `top` runs this on
+    * every shard before [[scoreRest]] on any, so phase 2 starts at the θ of
+    * all the seed's documents.
+    */
+  def scoreSeed(
+      lists: Array[PostingList],
+      docLen: Long => Int,
+      plan: Bm25Plan,
+      top: TopK,
+      deleted: Long => Boolean
+  ): Unit = {
+    if (plan.seed < 0 || lists(plan.seed) == null) return
+    val cs = cursors(lists, plan)
+    val seed = cs.find(_.termIdx == plan.seed).get
+    while (!seed.exhausted) {
+      val d = seed.curDoc
+      if (!deleted(d)) {
+        val dl = docLen(d)
+        var score = 0.0
+        var j = 0
+        while (j < cs.length) {
+          val c = cs(j)
+          c.advanceTo(d) // a no-op on the seed's own cursor
+          if (!c.exhausted && c.curDoc == d) score += c.idfWeight * plan.bm25.tfNorm(c.curTf, dl, plan.avgdl)
+          j += 1
+        }
+        top.offer(ScoredDoc(d, score))
+      }
+      seed.next()
+    }
+  }
+
+  /** Phase 2: block-max WAND over this shard's lists other than the seed's,
+    * skipping the seed's documents, which [[scoreSeed]] offered. Without a
+    * seed (a single-term query) it is plain [[wand]] over every list.
+    */
+  def scoreRest(
+      lists: Array[PostingList],
+      docLen: Long => Int,
+      plan: Bm25Plan,
+      top: TopK,
+      deleted: Long => Boolean
+  ): Unit = {
+    val offered = if (plan.seed < 0 || lists(plan.seed) == null) null else lists(plan.seed).docIds
+    wand(cursors(lists, plan, except = plan.seed), docLen, plan, top, deleted, offered)
+  }
+
+  /** Block-max WAND over one shard's cursors, scoring into `top`. A cursor
+    * whose bound is below θ — a hot term once k docs matching a rarer term
+    * are held — is skipped with `advanceTo` instead of scored. Tombstones
+    * (`deleted`) and the ascending docIds in `offered` (documents an earlier
+    * phase offered; null for none) are skipped on one branch, so `deleted`
+    * stays the caller's one predicate.
     */
   def wand(
       cursors0: scala.collection.Seq[TermCursor],
       docLen: Long => Int,
       plan: Bm25Plan,
       top: TopK,
-      deleted: Long => Boolean = _ => false
+      deleted: Long => Boolean = _ => false,
+      offered: Array[Long] = null
   ): Unit = {
     var live: Array[TermCursor] = cursors0.filterNot(_.exhausted).toArray
     // indexed by global termIdx — a shard may hold only a subset of the
@@ -297,34 +396,32 @@ object Bm25Shard {
       if (pivot < 0) return
       val pivotDoc = live(pivot).curDoc
       if (live(0).curDoc == pivotDoc) {
+        // every cursor on pivotDoc — past the pivot too — adds to its score,
+        // so all of them bound it
+        var nMatch = 0
         var cbUb = 0.0
-        var j = 0
-        while (j <= pivot) { cbUb += live(j).curBlockUb; j += 1 }
-        if (deleted(pivotDoc)) {
-          var j2 = 0
-          while (j2 < live.length && live(j2).curDoc == pivotDoc) { live(j2).next(); j2 += 1 }
-        } else if (cbUb >= threshold) {
+        while (nMatch < live.length && live(nMatch).curDoc == pivotDoc) {
+          cbUb += live(nMatch).curBlockUb
+          nMatch += 1
+        }
+        if (cbUb >= threshold && !deleted(pivotDoc) &&
+            (offered == null || java.util.Arrays.binarySearch(offered, pivotDoc) < 0)) {
           // evaluate: gather contributions, sum in termIdx order
           java.util.Arrays.fill(matched, false)
-          j = 0
-          var nMatch = 0
-          while (j < live.length && live(j).curDoc == pivotDoc) {
+          var j = 0
+          while (j < nMatch) {
             val c = live(j)
             contrib(c.termIdx) = c.idfWeight * plan.bm25.tfNorm(c.curTf, docLen(pivotDoc), plan.avgdl)
             matched(c.termIdx) = true
-            nMatch = j + 1
             j += 1
           }
           var score = 0.0
           var t = 0
           while (t < contrib.length) { if (matched(t)) score += contrib(t); t += 1 }
           top.offer(ScoredDoc(pivotDoc, score))
-          j = 0
-          while (j < nMatch) { live(j).next(); j += 1 }
-        } else {
-          var j2 = 0
-          while (j2 < live.length && live(j2).curDoc == pivotDoc) { live(j2).next(); j2 += 1 }
         }
+        var j = 0
+        while (j < nMatch) { live(j).next(); j += 1 }
         live = dropExhausted(live)
       } else {
         live(0).advanceTo(pivotDoc)

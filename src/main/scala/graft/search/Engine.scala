@@ -322,15 +322,15 @@ object Engine {
           segRows.groupBy(_.term).map { case (t, rows) => t -> PostingList.of(rows) }
         val lookup = Norms.decode(normsBlob)
         plansB.value.iterator.flatMap { case (qid, plan) =>
-          val cursors = plan.terms.zipWithIndex.flatMap { case (t, i) =>
-            byTerm.get(t).map(plan.cursor(i, _))
-          }
-          if (cursors.isEmpty) Iterator.empty
+          val lists = plan.terms.map(byTerm.getOrElse(_, null)).toArray
+          if (lists.forall(_ == null)) Iterator.empty
           else {
             // one heap per (query, shard): each shard emits its own top-k
             val top = new Bm25Shard.TopK(kLocal)
-            if (useWand) Bm25Shard.wand(cursors, lookup.apply, plan, top, delB.value)
-            else Bm25Shard.exhaustive(cursors, lookup.apply, plan, top, delB.value)
+            if (useWand) {
+              Bm25Shard.scoreSeed(lists, lookup.apply, plan, top, delB.value)
+              Bm25Shard.scoreRest(lists, lookup.apply, plan, top, delB.value)
+            } else Bm25Shard.exhaustive(Bm25Shard.cursors(lists, plan), lookup.apply, plan, top, delB.value)
             top.result.iterator.map(s => (qid, s.docId, s.score))
           }
         }

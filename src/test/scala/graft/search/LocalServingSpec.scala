@@ -158,6 +158,43 @@ class LocalServingSpec extends AnyFunSuite {
       s"scored ${ls.docsScored} of df(hot)=$dfHot")
   }
 
+  test("seeded walk: local == exhaustive distributed with tombstoned seed docs, k > df(seed) and tied k-th scores") {
+    val reader = new IndexReader(spark, sharedThetaIndex())
+    // seeds: "rare" (df 16) for "hot rare"; "w17" (df 1) for "hot w17";
+    // "w75" (df 1, a rare doc) for "rare hot w75". k = 3 and 5 cut inside a
+    // group of tied rare docs, k = 20 and 50 exceed df(rare), so phase 2
+    // runs from θ = −∞ or from a θ held only by the seed's docs
+    def check(what: String): Unit = {
+      val ls = new LocalServing(reader)
+      for (bm25 <- Seq(Bm25(), Bm25(b = 0.0));
+           q <- Seq("hot rare", "hot w17", "rare hot w75", "w75 rare"); k <- Seq(1, 3, 5, 16, 20, 50)) {
+        val exhaustive = Engine.bm25TopK(reader, q, k, useWand = false, bm25 = bm25)
+          .collect().toSeq.sorted(Bm25Shard.resultOrdering)
+        assert(ls.bm25TopK(q, k, bm25) == exhaustive, s"$what: local, <$q> k=$k $bm25")
+        assert(Engine.bm25TopK(reader, q, k, bm25 = bm25).collect().toSeq.sorted(Bm25Shard.resultOrdering)
+          == exhaustive, s"$what: distributed, <$q> k=$k $bm25")
+      }
+      assert(ls.fallbacks == 0)
+    }
+    check("no tombstones")
+    // tombstones inside the seed's documents: tied rare docs on both sides
+    // of the k-th place, the w75 doc, and a hot-only doc
+    Deletes.delete(reader, org.apache.spark.sql.functions.col("docId").isin(15L, 60L, 75L, 90L, 1L))
+    reader.invalidateDeletes()
+    check("rare docs tombstoned")
+  }
+
+  test("docsScored: a hot+rare query scores exactly the rare term's documents") {
+    val reader = new IndexReader(spark, sharedThetaIndex())
+    val dfRare = reader.termStats(Seq("rare"))("rare")._1
+    assert(dfRare == 16L)
+    for (k <- Seq(1, 3, 10, 16)) {
+      val ls = new LocalServing(reader)
+      assert(ls.bm25TopK("hot rare", k).size == k)
+      assert(ls.docsScored == dfRare, s"k=$k: scored ${ls.docsScored}, df(rare)=$dfRare")
+    }
+  }
+
   test("Dataset view is a LocalRelation that composes without a search job") {
     val reader = new IndexReader(spark, dir)
     val ls = new LocalServing(reader)
