@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.analysis.{Tokenizers, TokenizeMode}
+import graft.analysis.Tokenizers
 import graft.codec.{PostingCodec, PostingBlock}
 import graft.core.{Posting, Sha256}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, SaveMode}
@@ -132,12 +132,15 @@ object IndexManifest {
   *                      delta+varint blocks with skip entries and block-max tf
   *                      (the chunk/dgap layout of reference lib/ii.c:2659).
   *
-  * Outputs under `dir`: docs/ (the input's columns — docId, content,
-  * meta — plus sha256, shard), lexicon/ (term, df, cf), norms/ (shard,
-  * varint doclen blob), segments/ (shard, term, salt, df, cf, blocks),
-  * metrics/ (per-partition lineage rows: terms, postings, bytes, elapsedMs),
-  * _hot_terms, one `_stage_<name>.done` marker per stage, manifest.json.
-  * Each stage is checkpointed; `build` resumes past completed stages
+  * Both entry points, [[build]] (tokenizes `content`) and
+  * [[buildFromPostings]] (caller-supplied postings), run the same stages
+  * and write the same outputs under `dir`: docs/ (the input's columns —
+  * docId, content, meta — plus sha256, shard), lexicon/ (term, df, cf,
+  * rev), norms/ (shard, varint doclen blob), segments/ (shard, term, salt,
+  * df, cf, blocks), metrics/ (per-partition lineage rows: terms, postings,
+  * bytes, elapsedMs), _hot_terms, one `_stage_<name>.done` marker per stage
+  * (docs, lexicon, norms, segments), manifest.json. Each stage is
+  * checkpointed; a rerun on the same `dir` resumes past completed stages
   * (north-rule resumability).
   */
 object IndexBuilder {
@@ -162,6 +165,103 @@ object IndexBuilder {
     */
   def build(spark: SparkSession, docsIn: DataFrame, dir: String, cfg: IndexConfig): IndexManifest = {
     import spark.implicits._
+    val tokName = cfg.tokenizerName
+    val withPos = cfg.withPositions
+    // The lexicon, norms and segments stages each re-read the docs parquet
+    // and tokenize it again: the build tokenizes the corpus three times. A
+    // traced build (perfbench/run.py --workload build --trace 1, seed 801,
+    // 4-core host) reads index.doc_rows_read_per_doc = 3.0. Caching the
+    // postings between the stages instead has not been measured.
+    runStages(spark, docsIn, col("content"), dir, cfg, builtFromContent = true)(
+      // one tokenize+combine pass: (term, docId, tf, positions, weight)
+      postings = docs => docs.select("docId", "content").as[(Long, String)]
+        .mapPartitions { iter =>
+          val tok = Tokenizers.byName(tokName)
+          val comb = new DocCombiner(withPos)
+          iter.flatMap { case (docId, content) =>
+            if (content == null) Array.empty[(String, Long, Int, Array[Int])]
+            else DocCombiner.docPostings(tok, comb, docId, content)
+          }
+        }
+        .toDF("term", "docId", "tf", "positions")
+        .withColumn("weight", lit(0)),
+      // a dedicated counting pass (tokenize only: no combine, no posting
+      // rows; one int row per doc reaches the by-shard shuffle), keyed by
+      // the shard the docs stage stored
+      doclens = docs => docs.select("shard", "docId", "content").as[(Int, Long, String)]
+        .mapPartitions { iter =>
+          val tok = Tokenizers.byName(tokName)
+          val scratch = new graft.analysis.Normalizer.Scratch
+          val counter = new graft.analysis.AddSink {
+            var n = 0
+            def acceptSpan(s: Int, e: Int, p: Int): Unit = n += 1
+            def acceptTerm(t: String, p: Int): Unit = n += 1
+          }
+          iter.map { case (shard, docId, content) =>
+            counter.n = 0
+            // the postings pass's tokenization, so doclen = Σ tf
+            if (content != null) DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
+            (shard, docId, counter.n)
+          }
+        })
+  }
+
+  /** Pre-tokenized build — the input mode for weighted vector columns
+    * (reference COLUMN_VECTOR|WITH_WEIGHT, groonga.h:323) and pre-tokenized
+    * content (the U+FFFE pre-tokenized delimiter, reference
+    * lib/tokenizers.c:101): the caller supplies the postings directly. Runs
+    * the same stages as [[build]] and writes the same files; the docs'
+    * sha256 is taken over the full row JSON (the content-digest invariant
+    * for tables whose "content" is structured rather than one text column)
+    * and the manifest records `builtFromContent = false`.
+    *
+    * @param docsMeta   docId + display/meta columns (the docs table)
+    * @param postingsIn (term, docId, tf, positions?, weight?) — missing
+    *                   positions/weight columns are filled with defaults
+    */
+  def buildFromPostings(
+      spark: SparkSession,
+      docsMeta: DataFrame,
+      postingsIn: DataFrame,
+      dir: String,
+      cfg: IndexConfig
+  ): IndexManifest = {
+    import spark.implicits._
+    var postings = postingsIn
+    if (!postings.columns.contains("positions"))
+      postings = postings.withColumn("positions", array().cast("array<int>"))
+    if (!postings.columns.contains("weight"))
+      postings = postings.withColumn("weight", lit(0))
+    runStages(spark, docsMeta, to_json(struct(docsMeta.columns.map(col).toSeq: _*)), dir, cfg,
+      builtFromContent = false)(
+      postings = _ => postings,
+      doclens = _ => postings
+        .withColumn("shard", shardOf(cfg.nShards))
+        .groupBy("shard", "docId").agg(sum("tf").cast("int").as("doclen"))
+        .as[(Int, Long, Int)])
+  }
+
+  /** The staged pipeline both entry points run — docs, lexicon, hot terms,
+    * norms, segments, manifest — writing the files listed on this object.
+    * Each stage leaves its marker when done and a rerun on the same `dir`
+    * skips it.
+    *
+    * @param docsIn    the docs table to store
+    * @param shaSource the column each stored doc's sha256 is taken over
+    *                  (null hashes as "")
+    * @param postings  (term, docId, tf, positions, weight) rows, given the
+    *                  stored docs
+    * @param doclens   (shard, docId, doclen) rows, given the stored docs
+    */
+  private def runStages(
+      spark: SparkSession,
+      docsIn: DataFrame,
+      shaSource: Column,
+      dir: String,
+      cfg: IndexConfig,
+      builtFromContent: Boolean
+  )(postings: DataFrame => DataFrame, doclens: DataFrame => Dataset[(Int, Long, Int)]): IndexManifest = {
+    import spark.implicits._
     // sidecar files (stage markers, hot terms, manifest) go through the
     // Hadoop FileSystem API so the index dir can be file:/hdfs:/s3a:
     val F = graft.core.Fs
@@ -171,33 +271,23 @@ object IndexBuilder {
     def markDone(name: String, payload: String = "ok"): Unit =
       F.writeString(spark, s"$dir/_stage_$name.done", payload)
     def stagePayload(name: String): String = F.readString(spark, s"$dir/_stage_$name.done")
-    var tLast = System.nanoTime()
-    def lap(what: String): Unit = {
-      val t = System.nanoTime()
-      System.err.println(f"[build] $what: ${(t - tLast) / 1e9}%.2fs")
-      tLast = t
-    }
-
-    val tokenizerName = cfg.tokenizerName
 
     // ---- stage 1: docs (sha256 invariant, shard assignment) -------------
-    // No tokenization here — the norms stage counts doclen in its own pass
-    // through DocCombiner.tokenize, the postings pass's tokenization, so it
-    // equals the sum of tf per doc. Sharding is docId mod nShards (shardOf):
-    // needs no corpus count (single pass over the input) and round-robins
-    // docs across shards, so shard sizes stay balanced whatever the docId
+    // No tokenization here. Sharding is docId mod nShards (shardOf): needs
+    // no corpus count (single pass over the input) and round-robins docs
+    // across shards, so shard sizes stay balanced whatever the docId
     // distribution. numDocs, the sha digest and min(docId) are accumulated
     // during this same pass (the first two recorded in the stage marker for
     // resume) — the manifest step never re-reads the docs table.
     if (!stageDone("docs")) {
       // null content = empty document (the reference stores missing column
       // values as empty; tokenizing null yields no postings)
-      val shaUdf = udf { (content: String) => Sha256.hex(if (content == null) "" else content) }
+      val shaUdf = udf { (s: String) => Sha256.hex(if (s == null) "" else s) }
       // Observation = exactly-once aggregates piggybacked on the write job
       // (immune to task retries, unlike accumulator-in-UDF counting)
       val obs = org.apache.spark.sql.Observation("docStats")
       docsIn
-        .withColumn("sha256", shaUdf(col("content")))
+        .withColumn("sha256", shaUdf(shaSource))
         .withColumn("shard", shardOf(cfg.nShards))
         .observe(obs,
           count(lit(1)).as("n"),
@@ -209,7 +299,6 @@ object IndexBuilder {
       // empty corpus: the sha sum Observation is null — record 0
       val shaOut = m("shaSum") match { case null => 0L; case v => v }
       markDone("docs", s"${m("n")} $shaOut")
-      lap("stage docs")
     }
     // resume robustness: a marker written by an older build version (payload
     // "ok") or otherwise unparseable falls back to recomputing the stats
@@ -228,80 +317,23 @@ object IndexBuilder {
     val docs = spark.read.parquet(s"$dir/docs")
 
     // ---- stages 2-4: lexicon, norms, segments ---------------------------
-    // Each stage is ONE pipelined pass over the docs parquet through the
-    // fused zero-allocation tokenize kernel. No cross-stage persist: on this
-    // hardware class the DataFrame cache materialization (columnar re-encode
-    // of ~50M posting rows) is memory-bandwidth-bound and does NOT scale
-    // with cores, while the tokenize kernel is compute-dense and does —
-    // re-tokenizing per consumer is both faster and scales better. (At
-    // 10^12 docs the same argument holds: a full-corpus cache would not fit
-    // regardless; per-stage streaming passes are the only shape that works.)
     if (!stageDone("segments") || !stageDone("lexicon") || !stageDone("norms")) {
-      val tokName = tokenizerName
-      val withPos = cfg.withPositions
-
-      // one tokenize+combine pass: (term, docId, tf, positions)
-      def postings: DataFrame = docs.select("docId", "content").as[(Long, String)]
-        .mapPartitions { iter =>
-          val tok = Tokenizers.byName(tokName)
-          val comb = new DocCombiner(withPos)
-          iter.flatMap { case (docId, content) =>
-            if (content == null) Array.empty[(String, Long, Int, Array[Int])]
-            else DocCombiner.docPostings(tok, comb, docId, content)
-          }
-        }
-        .toDF("term", "docId", "tf", "positions")
-
       // lexicon: EXACT global (df, cf) per term in one partial-agg shuffle
       // (map-side combine ships one row per distinct term per partition —
       // zipf makes that tiny next to the postings). Hot terms for salting
       // fall out of the same result: no sampling pre-pass, no separate
       // post-hoc lexicon job.
       if (!stageDone("lexicon")) {
-        postings.groupBy("term")
-          .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-          // rev = reversed term: suffix search becomes a prefix predicate on
-          // rev (the reference's KEY_WITH_SIS reversed-key trick,
-          // lib/pat.c:1150, as a sargable column)
-          .withColumn("rev", reverse(col("term")))
-          // persist in term order (the PAT key-order analogue, lib/pat.c
-          // cursor order): files/row-groups carry non-overlapping term
-          // ranges, so point (isin) and prefix (startsWith) lookups prune
-          // to O(query terms) row groups instead of scanning the lexicon.
-          // The range shuffle is over one row per distinct term — noise
-          // next to the postings shuffle.
-          .repartitionByRange(col("term")).sortWithinPartitions("term")
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/lexicon")
+        writeLexicon(postings(docs).groupBy("term")
+          .agg(count(lit(1)).as("df"), sum("tf").as("cf")), dir)
         markDone("lexicon")
-        lap("stage lexicon")
       }
-      val lex = spark.read.parquet(s"$dir/lexicon")
-      val hotTerms: Array[String] =
-        lex.filter(col("df") >= cfg.hotTermDf).select("term").as[String].collect().sorted
+      val hotTerms: Array[String] = spark.read.parquet(s"$dir/lexicon")
+        .filter(col("df") >= cfg.hotTermDf).select("term").as[String].collect().sorted
       F.writeString(spark, s"$dir/_hot_terms", hotTerms.mkString("\n"))
-      lap("hot terms from lexicon")
 
-      // norms sidecar: doclen per doc, computed by a dedicated counting pass
-      // (tokenize only — no combine, no posting rows, no shuffle of
-      // postings; ~one int row per doc reaches the tiny by-shard shuffle),
-      // keyed by the shard the docs stage stored
       if (!stageDone("norms")) {
-        docs.select("shard", "docId", "content").as[(Int, Long, String)]
-          .mapPartitions { iter =>
-            val tok = Tokenizers.byName(tokName)
-            val scratch = new graft.analysis.Normalizer.Scratch
-            val counter = new graft.analysis.AddSink {
-              var n = 0
-              def acceptSpan(s: Int, e: Int, p: Int): Unit = n += 1
-              def acceptTerm(t: String, p: Int): Unit = n += 1
-            }
-            iter.map { case (shard, docId, content) =>
-              counter.n = 0
-              // the postings pass's tokenization, so doclen = Σ tf
-              if (content != null) DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
-              (shard, docId, counter.n)
-            }
-          }
+        doclens(docs)
           .groupByKey(_._1)
           .mapGroups { (shard, it) =>
             val arr = it.map(t => (t._2, t._3)).toArray.sortBy(_._1)
@@ -310,10 +342,8 @@ object IndexBuilder {
           .toDF("shard", "norms")
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/norms")
         markDone("norms")
-        lap("stage norms")
       }
-      encodeSegmentsStage(spark, postings.withColumn("weight", lit(0)), dir, cfg, hotTerms)
-      lap("stage segments encode+write")
+      encodeSegmentsStage(spark, postings(docs), dir, cfg, hotTerms)
       markDone("segments")
     }
 
@@ -333,18 +363,35 @@ object IndexBuilder {
       numDocs = numDocs,
       avgDoclen = if (numDocs == 0) 0.0 else totalTokens.toDouble / numDocs,
       totalTokens = totalTokens,
-      tokenizerName = tokenizerName,
+      tokenizerName = cfg.tokenizerName,
       withPositions = cfg.withPositions,
       nShards = cfg.nShards,
       nSalts = cfg.nSalts,
       contentShaXor = shaSum,
       hotTerms = hotTerms,
-      stagesDone = Seq("docs", "lexicon", "norms", "segments")
+      stagesDone = Seq("docs", "lexicon", "norms", "segments"),
+      withWeights = cfg.withWeights,
+      builtFromContent = builtFromContent
     )
-    lap("stage manifest stats")
     F.writeString(spark, s"$dir/manifest.json", IndexManifest.toJson(manifest))
     manifest
   }
+
+  /** The one lexicon writer (bulk build, pre-tokenized build, compaction):
+    * `termStats` (term, df, cf) plus `rev`, the reversed term — suffix
+    * search becomes a prefix predicate on rev (the reference's KEY_WITH_SIS
+    * reversed-key trick, lib/pat.c:1150, as a sargable column) — persisted
+    * in term order (the PAT key-order analogue, lib/pat.c cursor order):
+    * files/row-groups carry non-overlapping term ranges, so point (isin) and
+    * prefix (startsWith) lookups prune to O(query terms) row groups instead
+    * of scanning the lexicon. The range shuffle is over one row per distinct
+    * term — noise next to the postings shuffle.
+    */
+  private[graft] def writeLexicon(termStats: DataFrame, dir: String): Unit =
+    termStats
+      .withColumn("rev", reverse(col("term")))
+      .repartitionByRange(col("term")).sortWithinPartitions("term")
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/lexicon")
 
   /** The shuffle+encode stage shared by both build entry points.
     * `postingsW` columns: (term, docId, tf, positions, weight).
@@ -438,94 +485,6 @@ object IndexBuilder {
     spark.createDataset(metricRows)
       .toDF("partitionId", "terms", "postings", "bytes", "elapsedMs")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/metrics")
-  }
-
-  /** Pre-tokenized build — the input mode for weighted vector columns
-    * (reference COLUMN_VECTOR|WITH_WEIGHT, groonga.h:323) and pre-tokenized
-    * content (the U+FFFE pre-tokenized delimiter, reference
-    * lib/tokenizers.c:101): the caller supplies the postings directly.
-    *
-    * @param docsMeta   docId + display/meta columns (the docs table)
-    * @param postingsIn (term, docId, tf, positions?, weight?) — missing
-    *                   positions/weight columns are filled with defaults
-    */
-  def buildFromPostings(
-      spark: SparkSession,
-      docsMeta: DataFrame,
-      postingsIn: DataFrame,
-      dir: String,
-      cfg: IndexConfig
-  ): IndexManifest = {
-    import spark.implicits._
-    graft.core.Fs.mkdirs(spark, dir)
-    var postings = postingsIn
-    if (!postings.columns.contains("positions"))
-      postings = postings.withColumn("positions", array().cast("array<int>"))
-    if (!postings.columns.contains("weight"))
-      postings = postings.withColumn("weight", lit(0))
-
-    // docs: sha over the full row JSON (the content-digest invariant for
-    // tables whose "content" is structured rather than one text column)
-    val shaUdf = udf { (s: String) => Sha256.hex(s) }
-    val obs = org.apache.spark.sql.Observation(s"docStats_${System.identityHashCode(postingsIn)}")
-    docsMeta
-      .withColumn("sha256", shaUdf(to_json(struct(docsMeta.columns.map(col).toSeq: _*))))
-      .withColumn("shard", shardOf(cfg.nShards))
-      .observe(obs,
-        count(lit(1)).as("n"),
-        sum(conv(substring(col("sha256"), 1, 8), 16, 10).cast("long")).as("shaSum"),
-        min(col("docId")).as("minDocId"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/docs")
-    val m = obs.get
-    requireNonNegativeIds(m("minDocId"))
-    val numDocs = m("n").asInstanceOf[Long]
-    val shaSum = m("shaSum") match { case null => 0L; case v => v.asInstanceOf[Long] }
-
-    postings.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      .withColumn("rev", reverse(col("term")))
-      // term-ordered persistence: see the bulk build's lexicon stage
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/lexicon")
-    val lex = spark.read.parquet(s"$dir/lexicon")
-    val hotTerms: Array[String] =
-      lex.filter(col("df") >= cfg.hotTermDf).select("term").as[String].collect().sorted
-
-    // norms from the postings (doclen = Σ tf per doc)
-    postings
-      .withColumn("shard", shardOf(cfg.nShards))
-      .groupBy("shard", "docId").agg(sum("tf").cast("int").as("doclen"))
-      .as[(Int, Long, Int)]
-      .groupByKey(_._1)
-      .mapGroups { (shard, it) =>
-        val arr = it.map(t => (t._2, t._3)).toArray.sortBy(_._1)
-        (shard, graft.codec.Norms.encode(arr.iterator))
-      }
-      .toDF("shard", "norms")
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/norms")
-
-    encodeSegmentsStage(spark, postings, dir, cfg, hotTerms)
-
-    val tokStats = lex.agg(sum("cf")).collect()(0)
-    val totalTokens = if (tokStats.isNullAt(0)) 0L else tokStats.getLong(0)
-    val manifest = IndexManifest(
-      numDocs = numDocs,
-      avgDoclen = if (numDocs == 0) 0.0 else totalTokens.toDouble / numDocs,
-      totalTokens = totalTokens,
-      tokenizerName = cfg.tokenizerName,
-      withPositions = cfg.withPositions,
-      nShards = cfg.nShards,
-      nSalts = cfg.nSalts,
-      contentShaXor = shaSum,
-      hotTerms = hotTerms,
-      stagesDone = Seq("docs", "lexicon", "norms", "segments"),
-      withWeights = cfg.withWeights,
-      // externally-supplied postings: content (if stored at all) was NOT
-      // what produced them, so the scan-verify escape must stay off
-      builtFromContent = false
-    )
-    graft.core.Fs.writeString(spark, s"$dir/manifest.json", IndexManifest.toJson(manifest))
-    manifest
   }
 
   /** Deterministic dense docId assignment = global sort rank over the natural

@@ -349,9 +349,10 @@ object Engine {
             case None => Iterator.empty
           }
         }
-    perShard.groupByKey(_._1).flatMapGroups { (_, it) =>
-      it.toSeq.sortWith((a, b) => a._3 > b._3 || (a._3 == b._3 && a._2 < b._2))
-        .take(kLocal).iterator
+    perShard.groupByKey(_._1).flatMapGroups { (qid, it) =>
+      val top = new Bm25Shard.TopK(kLocal)
+      it.foreach { case (_, docId, score) => top.offer(ScoredDoc(docId, score)) }
+      top.result.iterator.map(s => (qid, s.docId, s.score))
     }.toDF("query_id", "doc_id", "score")
   }
 

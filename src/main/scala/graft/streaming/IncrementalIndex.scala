@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.codec.{Norms, PostingCodec}
-import graft.core.Posting
 import graft.index.{BlockRow, IndexBuilder, IndexConfig, IndexManifest, SegmentRow}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -93,9 +92,7 @@ object IncrementalIndex {
         val all = rows.toSeq
         if (all.size == 1) all.head
         else {
-          val merged = all.iterator
-            .flatMap(r => PostingCodec.decode(r.blocks.map(_.toBlock), withPos))
-            .toArray.sortBy(_.docId)
+          val merged = graft.search.Searcher.mergeSalts(all, withPos)
           val (blocks, df, cf) = PostingCodec.encode(merged.iterator, withPos, withW)
           SegmentRow(shard, term, salt, df, cf,
             blocks.map(b => BlockRow(b.firstDoc, b.lastDoc, b.n, b.maxTf, b.data)))
@@ -120,13 +117,9 @@ object IncrementalIndex {
       .toDF("shard", "norms")
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/norms")
 
-    // lexicon: re-aggregate (rev column kept for suffix search; term-ordered
-    // persistence like the bulk build, so lookups row-group-prune)
-    spark.read.parquet(s"$outDir/segments")
-      .groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf"))
-      .withColumn("rev", reverse(col("term")))
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/lexicon")
+    // lexicon: re-aggregate the merged segments through the build's writer
+    IndexBuilder.writeLexicon(spark.read.parquet(s"$outDir/segments")
+      .groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf")), outDir)
 
     // metrics lineage: union of input metrics tagged by source dir
     dirs.zipWithIndex.map { case (d, i) =>
