@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
   * lib/proc.c:5207-5211, grn_ii_truncate lib/grn_ii.h:171) re-expressed
   * LSM-style for immutable distributed storage: deletes APPEND docId
   * tombstone files under `<index>/deletes/`; every query path subtracts the
-  * tombstone set; `compact` rebuilds the index without the deleted docs
-  * (the mutate-in-place of the reference's mmap'd segments has no
-  * distributed analogue — tombstone-plus-rewrite is the Iceberg/Delta
-  * pattern for the same contract).
+  * tombstone set; `compact` rewrites the index without the deleted docs
+  * through [[IndexBuilder.compact]] (the mutate-in-place of the reference's
+  * mmap'd segments has no distributed analogue — tombstone-plus-rewrite is
+  * the Iceberg/Delta pattern for the same contract).
   *
   * Tombstones broadcast to executors (they are small between compactions);
   * at 10^12-doc scale they would instead co-partition with the shards, the
@@ -33,15 +33,13 @@ object Deletes {
   /** Tombstone every doc (reference `truncate`). */
   def truncate(reader: IndexReader): Long = delete(reader, lit(true))
 
-  /** Rebuild the index at `newDir` without tombstoned docs — compaction.
-    * Produces an index identical to a fresh build over the live docs.
+  /** Rewrite the index at `newDir` without tombstoned docs — compaction.
+    * One [[IndexBuilder.compact]] over the stored postings, with the
+    * config the index's manifest records: the result is identical to a
+    * fresh build (or `buildFromPostings`) over the live docs.
     */
-  def compact(spark: SparkSession, reader: IndexReader, newDir: String, cfg: IndexConfig): IndexManifest = {
-    val live = reader.docs
-      .join(deletedIdsDf(spark, reader.dir), Seq("docId"), "left_anti")
-      .drop("sha256", "shard")
-    IndexBuilder.build(spark, live, newDir, cfg)
-  }
+  def compact(spark: SparkSession, reader: IndexReader, newDir: String): IndexManifest =
+    IndexBuilder.compact(spark, Seq(reader.dir), newDir)
 
   private[index] def deletedIdsDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -30,8 +30,7 @@ final case class IndexConfig(
     nShards: Int = 32,
     buildPartitions: Int = 32,
     hotTermDf: Long = 50000L,
-    nSalts: Int = 8,
-    seed: Long = 42L
+    nSalts: Int = 8
 )
 
 /** Manifest: everything the query side needs + stage checkpoints for resume. */
@@ -43,6 +42,10 @@ final case class IndexManifest(
     withPositions: Boolean,
     nShards: Int,
     nSalts: Int,
+    /** The build's [[IndexConfig.hotTermDf]], which compaction reuses.
+      * Manifests written before this field read back as Long.MaxValue.
+      */
+    hotTermDf: Long,
     contentShaXor: Long,
     hotTerms: Array[String],
     stagesDone: Seq[String],
@@ -77,7 +80,7 @@ object IndexManifest {
        |"formatVersion":${m.formatVersion},
        |"tokenizerName":${js(m.tokenizerName)},"withPositions":${m.withPositions},
        |"withWeights":${m.withWeights},"builtFromContent":${m.builtFromContent},
-       |"nShards":${m.nShards},"nSalts":${m.nSalts},
+       |"nShards":${m.nShards},"nSalts":${m.nSalts},"hotTermDf":${m.hotTermDf},
        |"contentShaXor":${m.contentShaXor},
        |"hotTerms":[${m.hotTerms.map(js).mkString(",")}],
        |"stagesDone":[${m.stagesDone.map(js).mkString(",")}]}""".stripMargin
@@ -108,6 +111,8 @@ object IndexManifest {
       withPositions = s.contains("\"withPositions\":true"),
       nShards = num("nShards").toInt,
       nSalts = num("nSalts").toInt,
+      hotTermDf =
+        if (s.contains("\"hotTermDf\":")) num("hotTermDf").toLong else Long.MaxValue,
       contentShaXor = num("contentShaXor").toLong,
       hotTerms = arr("hotTerms"),
       stagesDone = arr("stagesDone").toSeq,
@@ -132,16 +137,18 @@ object IndexManifest {
   *                      delta+varint blocks with skip entries and block-max tf
   *                      (the chunk/dgap layout of reference lib/ii.c:2659).
   *
-  * Both entry points, [[build]] (tokenizes `content`) and
-  * [[buildFromPostings]] (caller-supplied postings), run the same stages
-  * and write the same outputs under `dir`: docs/ (the input's columns —
-  * docId, content, meta — plus sha256, shard), lexicon/ (term, df, cf,
-  * rev), norms/ (shard, varint doclen blob), segments/ (shard, term, salt,
-  * df, cf, blocks), metrics/ (per-partition lineage rows: terms, postings,
-  * bytes, elapsedMs), _hot_terms, one `_stage_<name>.done` marker per stage
-  * (docs, lexicon, norms, segments), manifest.json. Each stage is
-  * checkpointed; a rerun on the same `dir` resumes past completed stages
-  * (north-rule resumability).
+  * This is the one index writer. Its three entry points, [[build]]
+  * (tokenizes `content`), [[buildFromPostings]] (caller-supplied postings)
+  * and [[compact]] (the stored postings of existing indexes), run the same
+  * stages and write the same outputs under `dir`: docs/ (the input's
+  * columns — docId, content, meta — plus sha256, shard), lexicon/ (term,
+  * df, cf, rev), norms/ (shard, varint doclen blob), segments/ (shard,
+  * term, salt, df, cf, blocks), metrics/ (per-partition lineage rows:
+  * terms, postings, bytes, elapsedMs), _hot_terms, one `_stage_<name>.done`
+  * marker per stage (docs, lexicon, norms, segments), manifest.json (which
+  * records the config a later compaction reuses, `hotTermDf` included).
+  * Each stage is checkpointed; a rerun on the same `dir` resumes past
+  * completed stages (north-rule resumability).
   */
 object IndexBuilder {
 
@@ -172,7 +179,7 @@ object IndexBuilder {
     // traced build (perfbench/run.py --workload build --trace 1, seed 801,
     // 4-core host) reads index.doc_rows_read_per_doc = 3.0. Caching the
     // postings between the stages instead has not been measured.
-    runStages(spark, docsIn, col("content"), dir, cfg, builtFromContent = true)(
+    runStages(spark, docsIn, sha256Of(col("content")), dir, cfg, builtFromContent = true)(
       // one tokenize+combine pass: (term, docId, tf, positions, weight)
       postings = docs => docs.select("docId", "content").as[(Long, String)]
         .mapPartitions { iter =>
@@ -232,8 +239,8 @@ object IndexBuilder {
       postings = postings.withColumn("positions", array().cast("array<int>"))
     if (!postings.columns.contains("weight"))
       postings = postings.withColumn("weight", lit(0))
-    runStages(spark, docsMeta, to_json(struct(docsMeta.columns.map(col).toSeq: _*)), dir, cfg,
-      builtFromContent = false)(
+    runStages(spark, docsMeta, sha256Of(to_json(struct(docsMeta.columns.map(col).toSeq: _*))),
+      dir, cfg, builtFromContent = false)(
       postings = _ => postings,
       doclens = _ => postings
         .withColumn("shard", shardOf(cfg.nShards))
@@ -241,22 +248,79 @@ object IndexBuilder {
         .as[(Int, Long, Int)])
   }
 
-  /** The staged pipeline both entry points run — docs, lexicon, hot terms,
+  /** Compaction: rewrite the indexes at `dirs` (a base and its deltas, or
+    * one index with tombstones) as one index at `outDir`, through the stages
+    * [[build]] runs. Nothing is re-tokenized: the postings are the inputs'
+    * segment rows decoded, the doclens their norms decoded, and each doc
+    * keeps its stored sha256; every tombstoned doc is dropped from all three
+    * and no `deletes/` is written. So the output equals, file for file, a
+    * fresh build over the live docs (of the kind the inputs were built by:
+    * the manifest's `builtFromContent` is the AND over them), hot terms
+    * re-derived from the union's df. The config is the inputs' manifests';
+    * they must agree on it, and `buildPartitions` is the session's
+    * shuffle-partition count. A rerun on the same `outDir` resumes by stage
+    * marker.
+    */
+  def compact(spark: SparkSession, dirs: Seq[String], outDir: String): IndexManifest = {
+    import spark.implicits._
+    require(dirs.nonEmpty, "nothing to compact")
+    require(!dirs.contains(outDir), s"cannot compact into an input directory: $outDir")
+    val manifests = dirs.map(d =>
+      IndexManifest.fromJson(graft.core.Fs.readString(spark, s"$d/manifest.json")))
+    val configs = manifests.map(m => IndexConfig(tokenizerName = m.tokenizerName,
+      withPositions = m.withPositions, withWeights = m.withWeights, nShards = m.nShards,
+      buildPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      hotTermDf = m.hotTermDf, nSalts = m.nSalts)).distinct
+    require(configs.size == 1, s"inputs disagree on the index config: ${configs.mkString(", ")}")
+    require(manifests.forall(_.formatVersion == IndexManifest.FormatVersion),
+      s"an input has an old posting layout (need v${IndexManifest.FormatVersion}) — rebuild it")
+    val cfg = configs.head
+    val withPos = cfg.withPositions
+
+    val deleted = dirs.filter(d => graft.core.Fs.exists(spark, s"$d/deletes"))
+      .map(d => Deletes.deletedIdsDf(spark, d)).reduceOption(_ union _)
+    def live(rows: DataFrame): DataFrame =
+      deleted.fold(rows)(ids => rows.join(broadcast(ids), Seq("docId"), "left_anti"))
+    def union(part: String): DataFrame = dirs.map(d => spark.read.parquet(s"$d/$part"))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+
+    runStages(spark, live(union("docs")), col("sha256"), outDir, cfg,
+      builtFromContent = manifests.forall(_.builtFromContent))(
+      postings = _ => live(union("segments").as[SegmentRow]
+        .flatMap(r => PostingCodec.decode(r.blocks.map(_.toBlock), withPos)
+          .map(p => (r.term, p.docId, p.tf, p.positions, p.weight)))
+        .toDF("term", "docId", "tf", "positions", "weight")),
+      doclens = _ => live(union("norms").as[(Int, Array[Byte])]
+        .flatMap { case (shard, blob) =>
+          val norms = graft.codec.Norms.decode(blob)
+          norms.docIds.indices.map(i => (shard, norms.docIds(i), norms.lens(i)))
+        }
+        .toDF("shard", "docId", "doclen"))
+        // the anti-join puts docId first; the tuple reads columns by position
+        .select("shard", "docId", "doclen").as[(Int, Long, Int)])
+  }
+
+  // a stored doc's sha256: the hex digest of `source`; null hashes as "" (a
+  // null content is an empty document, as the reference stores a missing
+  // column value)
+  private def sha256Of(source: Column): Column =
+    udf((s: String) => Sha256.hex(if (s == null) "" else s)).apply(source)
+
+  /** The staged pipeline every entry point runs — docs, lexicon, hot terms,
     * norms, segments, manifest — writing the files listed on this object.
     * Each stage leaves its marker when done and a rerun on the same `dir`
     * skips it.
     *
-    * @param docsIn    the docs table to store
-    * @param shaSource the column each stored doc's sha256 is taken over
-    *                  (null hashes as "")
-    * @param postings  (term, docId, tf, positions, weight) rows, given the
-    *                  stored docs
-    * @param doclens   (shard, docId, doclen) rows, given the stored docs
+    * @param docsIn   the docs table to store
+    * @param sha256   each stored doc's sha256 column
+    * @param postings (term, docId, tf, positions, weight) rows, given the
+    *                 stored docs
+    * @param doclens  (shard, docId, doclen) rows, given the stored docs
     */
   private def runStages(
       spark: SparkSession,
       docsIn: DataFrame,
-      shaSource: Column,
+      sha256: Column,
       dir: String,
       cfg: IndexConfig,
       builtFromContent: Boolean
@@ -280,14 +344,11 @@ object IndexBuilder {
     // during this same pass (the first two recorded in the stage marker for
     // resume) — the manifest step never re-reads the docs table.
     if (!stageDone("docs")) {
-      // null content = empty document (the reference stores missing column
-      // values as empty; tokenizing null yields no postings)
-      val shaUdf = udf { (s: String) => Sha256.hex(if (s == null) "" else s) }
       // Observation = exactly-once aggregates piggybacked on the write job
       // (immune to task retries, unlike accumulator-in-UDF counting)
       val obs = org.apache.spark.sql.Observation("docStats")
       docsIn
-        .withColumn("sha256", shaUdf(shaSource))
+        .withColumn("sha256", sha256)
         .withColumn("shard", shardOf(cfg.nShards))
         .observe(obs,
           count(lit(1)).as("n"),
@@ -367,6 +428,7 @@ object IndexBuilder {
       withPositions = cfg.withPositions,
       nShards = cfg.nShards,
       nSalts = cfg.nSalts,
+      hotTermDf = cfg.hotTermDf,
       contentShaXor = shaSum,
       hotTerms = hotTerms,
       stagesDone = Seq("docs", "lexicon", "norms", "segments"),
@@ -387,7 +449,7 @@ object IndexBuilder {
     * of scanning the lexicon. The range shuffle is over one row per distinct
     * term — noise next to the postings shuffle.
     */
-  private[graft] def writeLexicon(termStats: DataFrame, dir: String): Unit =
+  private def writeLexicon(termStats: DataFrame, dir: String): Unit =
     termStats
       .withColumn("rev", reverse(col("term")))
       .repartitionByRange(col("term")).sortWithinPartitions("term")

@@ -48,7 +48,7 @@ object Searcher {
   }
 
   /** A term's (possibly salted) segment rows as one docId-ascending list. */
-  private[graft] def mergeSalts(rows: Seq[SegmentRow], withPos: Boolean): Array[Posting] = {
+  private[search] def mergeSalts(rows: Seq[SegmentRow], withPos: Boolean): Array[Posting] = {
     if (rows.size == 1)
       PostingCodec.decode(rows.head.blocks.map(_.toBlock), withPos).toArray
     else

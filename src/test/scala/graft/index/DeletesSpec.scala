@@ -66,9 +66,7 @@ class DeletesSpec extends AnyFunSuite {
 
     // compact → fresh index without doc 2, no tombstones
     val cDir = java.nio.file.Files.createTempDirectory("graft_delc_").toString
-    val m = Deletes.compact(spark, r1, cDir,
-      IndexConfig(tokenizerName = "TokenDelimit", nShards = 2,
-        buildPartitions = 2, hotTermDf = 1000, nSalts = 2))
+    val m = Deletes.compact(spark, r1, cDir)
     assert(m.numDocs == 4)
     val rc = new IndexReader(spark, cDir)
     assert(rc.deletedIds.isEmpty)
