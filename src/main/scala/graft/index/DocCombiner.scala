@@ -179,14 +179,18 @@ object DocCombiner {
     comb.result(docId)
   }
 
-  /** The build's one tokenization of a document: `start` receives the
-    * normalized text the spans index into, then every token goes to `sink`.
-    * The postings pass ([[docPostings]]) and the norms pass both call it, so
-    * a document's doclen is the sum of tf over its postings.
+  /** The one tokenization of a document: `start` receives the normalized
+    * text the spans index into, then every token goes to `sink`; null
+    * content has no tokens. The build's postings pass and the scan-verify
+    * escape (`Engine.andScanVerify`) both call it through [[docPostings]],
+    * and the build's norms pass calls it directly, so a document's doclen
+    * is the sum of tf over its postings and the escape recounts exactly the
+    * tokens the build indexed.
     */
   def tokenize(tok: GTokenizer, scratch: Normalizer.Scratch, content: String, sink: AddSink)(
       start: Normalized => Unit): Unit =
-    if (content.indexOf('\uFFFE') >= 0) {
+    if (content == null) start(tok.normalizeWith("", scratch))
+    else if (content.indexOf('\uFFFE') >= 0) {
       // pre-tokenized content: the build cursor honors the U+FFFE
       // delimiter (GTokenizer.tokenizeEnabled) — the rare-doc allocating
       // Token path; the scan costs one indexOf on the common path

@@ -185,10 +185,7 @@ object IndexBuilder {
         .mapPartitions { iter =>
           val tok = Tokenizers.byName(tokName)
           val comb = new DocCombiner(withPos)
-          iter.flatMap { case (docId, content) =>
-            if (content == null) Array.empty[(String, Long, Int, Array[Int])]
-            else DocCombiner.docPostings(tok, comb, docId, content)
-          }
+          iter.flatMap { case (docId, content) => DocCombiner.docPostings(tok, comb, docId, content) }
         }
         .toDF("term", "docId", "tf", "positions")
         .withColumn("weight", lit(0)),
@@ -207,7 +204,7 @@ object IndexBuilder {
           iter.map { case (shard, docId, content) =>
             counter.n = 0
             // the postings pass's tokenization, so doclen = Σ tf
-            if (content != null) DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
+            DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
             (shard, docId, counter.n)
           }
         })

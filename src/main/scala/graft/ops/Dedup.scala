@@ -833,6 +833,15 @@ object Dedup {
 
   // ---- benchmark decontamination ---------------------------------------
 
+  /** The GPT-3 decontamination normalizer (Brown et al. 2020 §C applies
+    * its n-gram rule to lowercased, punctuation-stripped text): lowercase,
+    * replace every character outside [a-z0-9 ] with a space, collapse
+    * space runs, trim. Pure codegen'd string functions — folds into the
+    * shingling map stage at no extra pass.
+    */
+  val gpt3Normalize: Column => Column = c =>
+    trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", " "), " +", " "))
+
   /** Word-k-gram benchmark-contamination scan (the GPT-3/PaLM n-gram
     * decontamination rule, Brown et al. 2020 §C): a corpus doc is
     * contaminated when it shares ANY word k-gram with the benchmark set.
@@ -845,24 +854,13 @@ object Dedup {
     * 100 TB shape: benchmarks are MB-scale, so the distinct bench shingle
     * set broadcasts — the corpus side is one narrow shingle map + a
     * broadcast-hash semi-side join + a partial-agg count; the corpus is
-    * never shuffled on content. Set `broadcastBench = false` only when the
-    * "benchmark" side is itself corpus-scale.
+    * never shuffled on content.
     */
-  /** The GPT-3 decontamination normalizer (Brown et al. 2020 §C applies
-    * its n-gram rule to lowercased, punctuation-stripped text): lowercase,
-    * replace every character outside [a-z0-9 ] with a space, collapse
-    * space runs, trim. Pure codegen'd string functions — folds into the
-    * shingling map stage at no extra pass.
-    */
-  val gpt3Normalize: Column => Column = c =>
-    trim(regexp_replace(regexp_replace(lower(c), "[^a-z0-9 ]", " "), " +", " "))
-
   def contaminationHits(
       corpus: DataFrame,
       bench: DataFrame,
       k: Int = 5,
       textCol: String = "text",
-      broadcastBench: Boolean = true,
       /** Applied to BOTH sides' text before shingling (e.g.
         * [[gpt3Normalize]]) so case/punctuation variants still match;
         * None compares raw shingles.
@@ -872,10 +870,9 @@ object Dedup {
     def norm(df: DataFrame): DataFrame =
       normalize.map(f => df.withColumn(textCol, f(col(textCol)))).getOrElse(df)
     val cg = shingles(norm(corpus), textCol, k)
-    val bgRaw = norm(bench)
+    val bg = norm(bench)
       .select(explode(gramsExpr(textCol, k)).as("g")).distinct()
-    val bg = if (broadcastBench) broadcast(bgRaw) else bgRaw
-    cg.join(bg, "g")
+    cg.join(broadcast(bg), "g")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("hit_grams"))
   }
@@ -888,11 +885,10 @@ object Dedup {
       bench: DataFrame,
       k: Int = 5,
       textCol: String = "text",
-      broadcastBench: Boolean = true,
       normalize: Option[Column => Column] = None
   ): DataFrame =
     corpus.join(
-      contaminationHits(corpus, bench, k, textCol, broadcastBench, normalize),
+      contaminationHits(corpus, bench, k, textCol, normalize),
       Seq("doc_id"), "left_anti")
 
   // ---- chunk-level corpus dedup (CCNet-style line dedup analogue) ------
@@ -919,18 +915,15 @@ object Dedup {
     * per-doc join — at web scale that surviving set is the boilerplate,
     * orders of magnitude smaller than the corpus.
     */
-  def chunkDupStats(docs: DataFrame, chunkWords: Int = 10, textCol: String = "text",
-      broadcastDups: Boolean = true): DataFrame = {
+  def chunkDupStats(docs: DataFrame, chunkWords: Int = 10, textCol: String = "text"): DataFrame = {
     val ch = chunks(docs, chunkWords, textCol)
       .select(col("doc_id"), md5(col("chunk")).as("digest"))
-    val dupRaw = ch.groupBy("digest").agg(count(lit(1)).as("cnt"))
+    val dup = ch.groupBy("digest").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > 1)
       .select(col("digest"), lit(1L).as("isdup"))
     // the surviving set is the BOILERPLATE, normally ≪ corpus — broadcast
-    // it so the per-doc pass stays a narrow map; flip broadcastDups off
-    // for pathological corpora where duplicated chunks rival the corpus
-    val dup = if (broadcastDups) broadcast(dupRaw) else dupRaw
-    ch.join(dup, Seq("digest"), "left")
+    // it so the per-doc pass stays a narrow map
+    ch.join(broadcast(dup), Seq("digest"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_chunks"),
         sum(coalesce(col("isdup"), lit(0L))).as("dup_chunks"))

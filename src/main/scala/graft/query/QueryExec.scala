@@ -194,28 +194,22 @@ object QueryExec {
   /** The (reader, query tokens, hottest df) of a right-side clause
     * eligible for the scan-verify escape: a plain Match — single token or
     * phrase — in a single-section context with default weight/cap/scorer
-    * (anything else changes the score algebra the escape reproduces). The
+    * (anything else changes the score algebra the escape reproduces), on
+    * an index [[Engine.scanVerifiable]] accepts for its tokens. The
     * returned df is the LARGEST token df: that posting list is what the
-    * index path must decode and the escape avoids. Phrases additionally
-    * need stored positions (the index path degrades to presence without
-    * them); a token absent from the lexicon keeps the index path — the
-    * empty intersection is already cheap there.
+    * index path must decode and the escape avoids. A token absent from the
+    * lexicon keeps the index path — the empty intersection is already
+    * cheap there.
     */
   private def scanFallbackMatch(
       ctx: Ctx, node: Node): Option[(IndexReader, Seq[graft.search.Searcher.QTok], Long)] =
     node match {
       case Match(text, _) if ctx.sections.size == 1 =>
         val (reader, sw) = ctx.sections.head
-        // WITH_WEIGHT indexes score (tf + tscore) — a plain tf recount
-        // would drop the stored weights; and an index NOT built from the
-        // docs' content column (buildFromPostings) has no source to verify
-        // against — both stay on the index path
-        if (sw.weight != 1.0 || sw.cap.nonEmpty || sw.tfIdf ||
-          reader.manifest.withWeights || !reader.manifest.builtFromContent) None
+        if (sw.weight != 1.0 || sw.cap.nonEmpty || sw.tfIdf) None
         else {
           val qtoks = graft.search.Searcher.queryTokens(reader, text)
-          if (qtoks.isEmpty ||
-            (qtoks.size > 1 && !reader.manifest.withPositions)) None
+          if (qtoks.isEmpty || !Engine.scanVerifiable(reader, qtoks)) None
           else {
             val terms = qtoks.map(_.term).distinct
             val st = reader.termStats(terms)

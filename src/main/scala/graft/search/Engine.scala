@@ -1,7 +1,8 @@
 package graft.search
 
 import graft.codec.Norms
-import graft.index.{IndexReader, SegmentRow}
+import graft.core.Posting
+import graft.index.{DocCombiner, IndexReader, SegmentRow}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -109,19 +110,18 @@ object Engine {
     * against the current result-set size): when one term's df exceeds
     * `ratio` × the other's, the hot side's postings are NEVER decoded — the
     * small side's result docs verify the hot term against the source
-    * content column instead (re-tokenize only the candidate docs), so cost
-    * is ∝ candidates where posting decode is ∝ df(hot). Result is
-    * identical to `SetOps.and(matchScores(a), matchScores(b))` — score =
-    * tf_a + tf_b on the intersection (AndAdaptiveSpec pins equality).
+    * content column instead ([[andScanVerify]]), so cost is ∝ candidates
+    * where posting decode is ∝ df(hot). Result is identical to
+    * `SetOps.and(matchScores(a), matchScores(b))` — score = noccur_a +
+    * noccur_b on the intersection (AndAdaptiveSpec pins equality).
     *
     * `ratio` mirrors the reference's
     * grn_ii_select_too_many_index_match_ratio knob. Default 8: the scan
     * verify re-tokenizes ~|candidates| docs (one pass each), which pays off
     * once the skipped posting list is roughly an order of magnitude larger
-    * than the candidate set. Multi-token (phrase) sides verify by position
-    * alignment over the re-tokenized candidates ([[Searcher.countAligned]]
-    * — the reference's sequential phrase check); a phrase hot side needs
-    * stored positions, else the index path runs.
+    * than the candidate set. A phrase hot side verifies by position
+    * alignment; when [[scanVerifiable]] refuses the hot side, the index
+    * path runs.
     */
   def andAdaptive(
       reader: IndexReader,
@@ -145,17 +145,22 @@ object Engine {
     }
     val ((estA, costA), (estB, costB)) = (bounds(qtA), bounds(qtB))
     if (estA == 0L || estB == 0L) return spark.emptyDataset[ScoredDoc]
-    def indexPath = SetOps.and(matchScores(reader, termA), matchScores(reader, termB))
-    // scan-verify recounts tf/alignments by tokenizing the docs' content
-    // column — only sound when that is literally what produced the
-    // postings; phrases additionally need stored positions
-    if (!reader.manifest.builtFromContent) return indexPath
     val (small, hotQts, estSmall, costHot) =
       if (estA <= estB) (termA, qtB, estA, costB) else (termB, qtA, estB, costA)
-    if (costHot.toDouble <= ratio * estSmall) indexPath
-    else if (hotQts.size > 1 && !reader.manifest.withPositions) indexPath
-    else andScanVerify(matchScores(reader, small), reader, hotQts)
+    if (costHot.toDouble > ratio * estSmall && scanVerifiable(reader, hotQts))
+      andScanVerify(matchScores(reader, small), reader, hotQts)
+    else SetOps.and(matchScores(reader, termA), matchScores(reader, termB))
   }
+
+  /** Whether [[andScanVerify]] reproduces the index path for these query
+    * tokens: the postings came from tokenizing the docs' content column
+    * (externally supplied postings cannot be recounted from content), and
+    * a phrase needs stored positions (without them the index path degrades
+    * to presence). A content-built index stores weight 0 on every posting,
+    * so its scores need no stored weights.
+    */
+  def scanVerifiable(reader: IndexReader, qtoks: Seq[Searcher.QTok]): Boolean =
+    reader.manifest.builtFromContent && (qtoks.size <= 1 || reader.manifest.withPositions)
 
   /** The scan-verify half of the too-many-matches escape: AND a hot term
     * onto an already-evaluated result set by re-tokenizing ONLY the
@@ -167,30 +172,29 @@ object Engine {
       hotTok: String): Dataset[ScoredDoc] =
     andScanVerify(left, reader, Seq(Searcher.QTok(hotTok, 0)))
 
-  /** Phrase form of the scan-verify escape: the hot right side is a full
-    * token sequence (offsets from GET-mode tokenization); candidates
-    * re-verify by position alignment over their re-tokenized content
-    * (reference sequential phrase fallback, lib/ii.c:6536-6654). Scores
-    * follow res_add AND semantics: candidate score + noccur, where noccur
-    * is the alignment count ([[Searcher.countAligned]]) — tf for a single
-    * token, phrase-occurrence count otherwise.
+  /** Phrase form of the scan-verify escape (reference sequential phrase
+    * fallback, lib/ii.c:6536-6654): the hot right side is a full token
+    * sequence (offsets from GET-mode tokenization). Each candidate's content
+    * goes through the build's postings kernel ([[DocCombiner.docPostings]]),
+    * so the recount sees exactly the tokens, tf and positions the build
+    * indexed, and [[Searcher.phraseCount]] counts them as the index path
+    * counts stored postings. Scores follow res_add AND semantics: candidate
+    * score + noccur — tf for a single token, phrase-occurrence count
+    * otherwise.
     */
   def andScanVerify(left: Dataset[ScoredDoc], reader: IndexReader,
       qtoks: Seq[Searcher.QTok]): Dataset[ScoredDoc] = {
-    // soundness precondition enforced HERE, not just at the rewrite sites:
-    // the recount reproduces posting tf/positions only when the postings
-    // came from tokenizing this docs table's content column
-    require(reader.manifest.builtFromContent,
+    require(scanVerifiable(reader, qtoks),
       "andScanVerify needs an index built from the docs' content column " +
-        "(manifest.builtFromContent): externally-supplied postings cannot " +
-        "be re-verified against content")
-    require(qtoks.size == 1 || reader.manifest.withPositions,
-      "phrase scan-verify needs positions in the index (the index path " +
-        "degrades to presence without them; the escape must not differ)")
+        "(manifest.builtFromContent), and positions in the index for a phrase")
     val spark = reader.spark
     import spark.implicits._
+    if (qtoks.isEmpty) return spark.emptyDataset[ScoredDoc]
     val tokName = reader.manifest.tokenizerName
-    val qtoksB = qtoks.toVector
+    val withPos = reader.manifest.withPositions
+    // distinct query terms in first-occurrence order, with their offsets
+    val terms = qtoks.map(_.term).distinct.toArray
+    val offsets = terms.map(t => qtoks.filter(_.term == t).map(_.offset).toArray)
     left.toDF("docId", "s1")
       .join(reader.liveDocs.select(col("docId"), col("content")), "docId")
       .select(col("docId").cast("long"), col("s1").cast("double"),
@@ -198,12 +202,14 @@ object Engine {
       .as[(Long, Double, String)]
       .mapPartitions { it =>
         val tok = graft.analysis.Tokenizers.byName(tokName)
+        val comb = new DocCombiner(withPos)
         it.flatMap { case (id, s1, content) =>
-          // Add-mode tokenization = exactly what the build indexed, so
-          // the aligned count equals the posting-path noccur it replaces
-          val toks = tok.tokenizeEnabled(if (content == null) "" else content,
-            graft.analysis.TokenizeMode.Add)
-          val noccur = Searcher.countAligned(toks, qtoksB)
+          val hit = new Array[Posting](terms.length)
+          DocCombiner.docPostings(tok, comb, id, content).foreach { case (t, _, tf, ps) =>
+            val i = terms.indexOf(t)
+            if (i >= 0) hit(i) = Posting(id, tf, ps)
+          }
+          val noccur = if (hit.contains(null)) 0 else Searcher.phraseCount(offsets, hit)
           if (noccur > 0) Some(ScoredDoc(id, s1 + noccur)) else None
         }
       }
@@ -368,7 +374,6 @@ object Engine {
     val spark = reader.spark
     import spark.implicits._
     if (termWeights.isEmpty) return spark.emptyDataset[ScoredDoc]
-    val withPos = reader.manifest.withPositions
     val twB = spark.sparkContext.broadcast(termWeights)
     val delB = reader.deletedBroadcast
     reader.segmentsFor(termWeights.keys.toSeq)
@@ -379,7 +384,7 @@ object Engine {
         // deterministic float accumulation: term order, then docId order
         rows.toSeq.sortBy(r => (r.term, r.salt)).foreach { r =>
           val w = twB.value(r.term)
-          graft.codec.PostingCodec.decode(r.blocks.map(_.toBlock), withPos)
+          graft.codec.PostingCodec.decode(r.blocks.map(_.toBlock), wantPositions = false)
             .foreach { p =>
               if (!del.contains(p.docId)) {
                 val s = p.tf * w

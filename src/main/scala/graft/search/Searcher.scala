@@ -60,51 +60,35 @@ object Searcher {
   @inline private def containsSorted(arr: Array[Int], v: Int): Boolean =
     java.util.Arrays.binarySearch(arr, v) >= 0
 
-  /** Phrase-occurrence count over a RE-TOKENIZED document: one occurrence
-    * per base position where every query token's term appears at
-    * base+offset — the scan-side twin of the PhraseMatch alignment in
-    * [[evalShardMatch]] (reference sequential phrase check,
-    * lib/ii.c:6536-6654), so the too-many-matches escape can re-verify a
-    * phrase against candidates' source text instead of decoding hot
-    * postings. For a single-token query this degenerates to tf (every
-    * position counts), matching the posting path's `noccur = tf`.
+  /** Occurrences of a query in ONE document, given each distinct query
+    * term's offsets in the query and its posting in the document (reference
+    * lib/ii.c:6941-6973): one occurrence per base >= 0 where every term's
+    * positions hold base + each of its offsets. Every base is counted once
+    * whichever term drives, so the count does not depend on the terms'
+    * order. A single-token query counts the posting's tf and ignores the
+    * offset: a lone token can carry offset > 0 (a stop-word filter dropped
+    * the query's first token without rebasing positions), and the
+    * alignment would drop occurrences below it. The index path
+    * ([[evalShardMatch]]) counts a matched doc's stored postings with it,
+    * the scan-verify escape ([[Engine.andScanVerify]]) a candidate's
+    * re-tokenized ones.
     */
-  def countAligned(tokens: Seq[graft.analysis.Token], qtoks: Seq[QTok]): Int = {
-    if (qtoks.isEmpty) return 0
-    val posByTerm: Map[String, Array[Int]] = tokens.groupBy(_.term)
-      .map { case (t, ts) => t -> ts.map(_.pos).distinct.sorted.toArray }
-    // single-token query: noccur = tf, OFFSET IGNORED — mirroring the
-    // posting path's singleTerm shortcut (evalShardMatch: driver(i).tf).
-    // A lone token can carry offset > 0 (e.g. a stop-word filter dropped
-    // the query's first token without rebasing positions); the base>=0
-    // alignment below would then wrongly drop occurrences at positions
-    // below the offset.
-    if (qtoks.size == 1)
-      return posByTerm.get(qtoks.head.term).map(_.length).getOrElse(0)
-    val uniq = qtoks.groupBy(_.term).toSeq
-      .map { case (t, qs) => (qs.map(_.offset), posByTerm.getOrElse(t, null)) }
-    if (uniq.exists(_._2 == null)) return 0
-    // drive from the sparsest term, like the posting path
-    val lists = uniq.sortBy(_._2.length)
-    val (driverOffs, driverPs) = lists.head
+  def phraseCount(offsets: Array[Array[Int]], postings: Array[Posting]): Int = {
+    if (offsets.length == 1 && offsets(0).length == 1) return postings(0).tf
+    val driverPs = postings(0).positions
     var cnt = 0
     var p = 0
     while (p < driverPs.length) {
-      val base = driverPs(p) - driverOffs.head
+      val base = driverPs(p) - offsets(0)(0)
       if (base >= 0) {
         var all = true
-        var d = 1
-        while (all && d < driverOffs.size) {
-          all = containsSorted(driverPs, base + driverOffs(d)); d += 1
-        }
-        var q = 1
-        while (all && q < lists.size) {
-          val (offs, ps) = lists(q)
-          var d2 = 0
-          while (all && d2 < offs.size) {
-            all = containsSorted(ps, base + offs(d2)); d2 += 1
-          }
-          q += 1
+        var t = 0
+        while (all && t < offsets.length) {
+          val ps = postings(t).positions
+          val offs = offsets(t)
+          var d = 0
+          while (all && d < offs.length) { all = containsSorted(ps, base + offs(d)); d += 1 }
+          t += 1
         }
         if (all) cnt += 1
       }
@@ -149,85 +133,51 @@ object Searcher {
     val uniq = qtoks.groupBy(_.term).toSeq // (term, offsets-with-dups)
     if (uniq.exists { case (t, _) => !byTerm.contains(t) }) return Iterator.empty
     // rarest-first: drive from the smallest per-shard posting list
-    val lists = uniq.map { case (t, qs) => (qs.map(_.offset), byTerm(t)) }
-      .sortBy(_._2.length)
+    val lists = uniq.map { case (t, qs) => (qs.map(_.offset).toArray, byTerm(t)) }
+      .sortBy(_._2.length).toArray
     if (lists.isEmpty) return Iterator.empty
 
-    val driverOffsets = lists.head._1
+    val offsets = lists.map(_._1)
     val driver = lists.head._2
-    val others = lists.tail.toArray
+    val others = lists.tail.map(_._2)
     val idx = new Array[Int](others.length)
+    // each term's posting in the current doc, in `lists` order
+    val hit = new Array[Posting](lists.length)
     val out = Vector.newBuilder[(Long, Int, Int)]
-    val singleTerm = others.isEmpty && driverOffsets.size == 1
+    val singleTerm = others.isEmpty && offsets(0).length == 1
 
     var i = 0
     while (i < driver.length) {
       val docId = driver(i).docId
+      hit(0) = driver(i)
       var ok = !deleted(docId)
       var j = 0
       while (ok && j < others.length) {
-        idx(j) = advance(others(j)._2, idx(j), docId)
-        ok = idx(j) < others(j)._2.length && others(j)._2(idx(j)).docId == docId
+        idx(j) = advance(others(j), idx(j), docId)
+        ok = idx(j) < others(j).length && others(j)(idx(j)).docId == docId
+        if (ok) hit(j + 1) = others(j)(idx(j))
         j += 1
       }
       if (ok) {
         val noccur: Int =
-          if (singleTerm) driver(i).tf // single-token query: noccur = tf
-          else if (!withPos) 1 // positions not stored: presence only
+          if (!withPos && !singleTerm) 1 // positions not stored: presence only
           else kind match {
-            case PhraseMatch =>
-              // one occurrence per base where every query offset aligns
-              val driverPs = driver(i).positions
-              var cnt = 0
-              var p = 0
-              while (p < driverPs.length) {
-                val base = driverPs(p) - driverOffsets.head
-                if (base >= 0) {
-                  var all = true
-                  var d = 1
-                  while (all && d < driverOffsets.size) {
-                    all = containsSorted(driverPs, base + driverOffsets(d)); d += 1
-                  }
-                  var q = 0
-                  while (all && q < others.length) {
-                    val ps = others(q)._2(idx(q)).positions
-                    val offs = others(q)._1
-                    var d2 = 0
-                    while (all && d2 < offs.size) {
-                      all = containsSorted(ps, base + offs(d2)); d2 += 1
-                    }
-                    q += 1
-                  }
-                  if (all) cnt += 1
-                }
-                p += 1
-              }
-              cnt
-            case NearMatch(maxInterval) =>
+            case NearMatch(maxInterval) if !singleTerm =>
               // one cursor per QUERY TOKEN, positions adjusted by the
               // token's query offset (reference token_info pos semantics:
               // ti->pos = p->pos - offset, so aligned tokens compare equal;
               // negatives are skipped by the initial skip-to-0)
-              val buf = scala.collection.mutable.ArrayBuffer[Array[Int]]()
-              driverOffsets.foreach { off =>
-                buf += driver(i).positions.map(_ - off).filter(_ >= 0)
-              }
-              var q = 0
-              while (q < others.length) {
-                val ps = others(q)._2(idx(q)).positions
-                others(q)._1.foreach { off =>
-                  buf += ps.map(_ - off).filter(_ >= 0)
-                }
-                q += 1
-              }
-              nearCount(buf.toArray, maxInterval)
+              val cursors = for (t <- hit.indices; off <- offsets(t))
+                yield hit(t).positions.map(_ - off).filter(_ >= 0)
+              nearCount(cursors.toArray, maxInterval)
+            case _ => phraseCount(offsets, hit)
           }
         if (noccur > 0) {
           // tscore = summed posting weights of the matched entries
           // (reference res_add tscore accumulation, lib/ii.c:6984)
-          var tscore = driver(i).weight
-          var q = 0
-          while (q < others.length) { tscore += others(q)._2(idx(q)).weight; q += 1 }
+          var tscore = 0
+          var t = 0
+          while (t < hit.length) { tscore += hit(t).weight; t += 1 }
           out += ((docId, noccur, tscore))
         }
       }

@@ -107,23 +107,23 @@ class AndAdaptiveSpec extends AnyFunSuite {
       Engine.matchScores(reader, "quick lazy")).isEmpty)
   }
 
-  test("countAligned: a single token ignores its offset (posting-tf parity)") {
-    import graft.analysis.Token
-    def tok(t: String, p: Int) = Token(t, p, forcePrefix = false, 0, 0)
-    val toks = Seq(tok("spark", 0), tok("batch", 1), tok("spark", 2))
+  test("phraseCount: a single token ignores its offset (posting-tf parity)") {
+    import graft.core.Posting
+    // one document: spark at positions {0, 2}, batch at {1}
+    val spark = Posting(0L, 2, Array(0, 2))
+    val batch = Posting(0L, 1, Array(1))
+    def count(terms: (Posting, Array[Int])*): Int =
+      Searcher.phraseCount(terms.map(_._2).toArray, terms.map(_._1).toArray)
     // a lone token can carry offset > 0 (stop-word-filtered query); the
-    // posting path's singleTerm shortcut counts full tf regardless —
-    // the scan twin must match, not drop positions below the offset
-    assert(Searcher.countAligned(toks, Seq(Searcher.QTok("spark", 1))) == 2)
-    assert(Searcher.countAligned(toks, Seq(Searcher.QTok("spark", 0))) == 2)
+    // single-token rule counts full tf regardless, not dropping positions
+    // below the offset
+    assert(count(spark -> Array(1)) == 2)
+    assert(count(spark -> Array(0)) == 2)
     // multi-token alignment still honors offsets
-    assert(Searcher.countAligned(toks,
-      Seq(Searcher.QTok("spark", 0), Searcher.QTok("batch", 1))) == 1)
-    assert(Searcher.countAligned(toks,
-      Seq(Searcher.QTok("batch", 0), Searcher.QTok("spark", 1))) == 1)
+    assert(count(spark -> Array(0), batch -> Array(1)) == 1)
+    assert(count(batch -> Array(0), spark -> Array(1)) == 1)
     // and a sequence that does NOT occur counts zero
-    assert(Searcher.countAligned(toks,
-      Seq(Searcher.QTok("batch", 0), Searcher.QTok("batch", 1))) == 0)
+    assert(count(batch -> Array(0, 1)) == 0)
   }
 
   test("query-syntax quoted phrase takes the escape and matches the index path") {
