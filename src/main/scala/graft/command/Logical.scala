@@ -436,14 +436,6 @@ object Logical {
       granularity: Option[String] = None): Seq[String] =
     windowPlan(spark, root, shardKey, range, granularity)._1
 
-  /** The ≤2 shards a bounded range only PARTIALLY covers (see
-    * [[boundarySet]] for the edge-aligned cover rules).
-    */
-  def boundaryShards(spark: SparkSession, root: String, shardKey: String,
-      range: LogicalRange,
-      granularity: Option[String] = None): Set[String] =
-    windowPlan(spark, root, shardKey, range, granularity)._2
-
   /** Finish or roll back a [[removeRange]] interrupted by JVM death: for
     * every `.old_<shard>` backup left behind — the op's only durable
     * intermediate state — either the rewrite already renamed into place

@@ -70,57 +70,48 @@ object IndexManifest {
   /** Current posting-payload layout: flag byte + varint streams. */
   val FormatVersion = 3
 
-  // dependency-free JSON (values are numbers/strings/flat arrays)
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   def toJson(m: IndexManifest): String = {
-    def js(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    s"""{"numDocs":${m.numDocs},"avgDoclen":${m.avgDoclen},"totalTokens":${m.totalTokens},
-       |"formatVersion":${m.formatVersion},
-       |"tokenizerName":${js(m.tokenizerName)},"withPositions":${m.withPositions},
-       |"withWeights":${m.withWeights},"builtFromContent":${m.builtFromContent},
-       |"nShards":${m.nShards},"nSalts":${m.nSalts},"hotTermDf":${m.hotTermDf},
-       |"contentShaXor":${m.contentShaXor},
-       |"hotTerms":[${m.hotTerms.map(js).mkString(",")}],
-       |"stagesDone":[${m.stagesDone.map(js).mkString(",")}]}""".stripMargin
+    val o = mapper.createObjectNode()
+      .put("numDocs", m.numDocs).put("avgDoclen", m.avgDoclen).put("totalTokens", m.totalTokens)
+      .put("formatVersion", m.formatVersion)
+      .put("tokenizerName", m.tokenizerName).put("withPositions", m.withPositions)
+      .put("withWeights", m.withWeights).put("builtFromContent", m.builtFromContent)
+      .put("nShards", m.nShards).put("nSalts", m.nSalts).put("hotTermDf", m.hotTermDf)
+      .put("contentShaXor", m.contentShaXor)
+    m.hotTerms.foldLeft(o.putArray("hotTerms"))(_.add(_))
+    m.stagesDone.foldLeft(o.putArray("stagesDone"))(_.add(_))
+    mapper.writeValueAsString(o)
   }
 
+  /** Reads what [[toJson]] writes, and older manifests: one without
+    * `formatVersion` reads as version 0 (pre-versioning payloads), without
+    * `hotTermDf` as Long.MaxValue, and without `withPositions`,
+    * `withWeights` or `builtFromContent` as false.
+    */
   def fromJson(s: String): IndexManifest = {
-    def num(k: String): String = {
-      val p = java.util.regex.Pattern.compile("\"" + k + "\":([-0-9.Ee]+)")
-      val mt = p.matcher(s); require(mt.find(), s"manifest missing $k"); mt.group(1)
-    }
-    def str(k: String): String = {
-      val p = java.util.regex.Pattern.compile("\"" + k + "\":\"((?:[^\"\\\\]|\\\\.)*)\"")
-      val mt = p.matcher(s); require(mt.find(), s"manifest missing $k")
-      mt.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-    }
-    def arr(k: String): Array[String] = {
-      val p = java.util.regex.Pattern.compile("\"" + k + "\":\\[(.*?)\\]", java.util.regex.Pattern.DOTALL)
-      val mt = p.matcher(s); require(mt.find(), s"manifest missing $k")
-      val body = mt.group(1).trim
-      if (body.isEmpty) Array.empty
-      else body.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
+    val o = mapper.readTree(s)
+    def field(k: String) = { val v = o.get(k); require(v != null, s"manifest missing $k"); v }
+    def flag(k: String) = o.has(k) && o.get(k).asBoolean
+    def strings(k: String) = {
+      val a = field(k); Array.tabulate(a.size)(a.get(_).asText)
     }
     IndexManifest(
-      numDocs = num("numDocs").toLong,
-      avgDoclen = num("avgDoclen").toDouble,
-      totalTokens = num("totalTokens").toLong,
-      tokenizerName = str("tokenizerName"),
-      withPositions = s.contains("\"withPositions\":true"),
-      nShards = num("nShards").toInt,
-      nSalts = num("nSalts").toInt,
-      hotTermDf =
-        if (s.contains("\"hotTermDf\":")) num("hotTermDf").toLong else Long.MaxValue,
-      contentShaXor = num("contentShaXor").toLong,
-      hotTerms = arr("hotTerms"),
-      stagesDone = arr("stagesDone").toSeq,
-      withWeights = s.contains("\"withWeights\":true"),
-      builtFromContent = s.contains("\"builtFromContent\":true"),
-      // manifests written before versioning carry v2-or-older payloads
-      formatVersion =
-        if (s.contains("\"formatVersion\":")) num("formatVersion").toInt else 0
+      numDocs = field("numDocs").asLong,
+      avgDoclen = field("avgDoclen").asDouble,
+      totalTokens = field("totalTokens").asLong,
+      tokenizerName = field("tokenizerName").asText,
+      withPositions = flag("withPositions"),
+      nShards = field("nShards").asInt,
+      nSalts = field("nSalts").asInt,
+      hotTermDf = if (o.has("hotTermDf")) o.get("hotTermDf").asLong else Long.MaxValue,
+      contentShaXor = field("contentShaXor").asLong,
+      hotTerms = strings("hotTerms"),
+      stagesDone = strings("stagesDone").toSeq,
+      withWeights = flag("withWeights"),
+      builtFromContent = flag("builtFromContent"),
+      formatVersion = if (o.has("formatVersion")) o.get("formatVersion").asInt else 0
     )
   }
 }
@@ -133,9 +124,11 @@ object IndexManifest {
   *   phase 2 (spill)  = the shuffle, keyed (shard, term, salt) — hot terms
   *                      salted by docId hash to defuse reducer skew,
   *   phase 3 (commit) = `sortWithinPartitions(shard, term, salt, docId)` +
-  *                      streaming `mapPartitions` encoder producing
-  *                      delta+varint blocks with skip entries and block-max tf
-  *                      (the chunk/dgap layout of reference lib/ii.c:2659).
+  *                      streaming `mapPartitions` encoder, one run at a time
+  *                      (`grn_ii_buffer_commit`'s term-at-a-time merge,
+  *                      reference lib/ii.c:8577), producing delta+varint
+  *                      blocks with skip entries and block-max tf (the
+  *                      chunk/dgap layout of reference lib/ii.c:2659).
   *
   * This is the one index writer. Its three entry points, [[build]]
   * (tokenizes `content`), [[buildFromPostings]] (caller-supplied postings)
@@ -465,6 +458,12 @@ object IndexBuilder {
     * query terms. What hash gives up vs range is only cross-FILE term
     * locality — row-group pruning and the serving-mode in-memory cache make
     * that immaterial, while the saved pass is a full corpus scan.
+    *
+    * The encoder streams: a run ends where the next row's (term, shard,
+    * salt) differs, [[PostingCodec.encode]] reads the run straight off the
+    * sorted partition, and the run leaves as one [[SegmentRow]]. Past
+    * Spark's sort, the encoder holds one 128-posting block plus the run's
+    * encoded bytes, never a whole run's decoded postings.
     */
   private def encodeSegmentsStage(
       spark: SparkSession,
@@ -488,49 +487,41 @@ object IndexBuilder {
       .repartition(cfg.buildPartitions, col("term"), col("shard"), col("salt"))
       .sortWithinPartitions("term", "shard", "salt", "docId")
 
-    // streaming run-length encoder; one pass, segment rows + per-partition
-    // lineage metrics via accumulator (tiny: one row per partition; deduped
-    // by partitionId against task retries)
+    // one pass over the sorted partition: each (term, shard, salt) run goes
+    // straight into the codec and leaves as one segment row; the
+    // partition's lineage row (tiny; deduped by partitionId against task
+    // retries) is added once the partition is exhausted
     val metricsAcc = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long, Long)]("buildMetrics")
     val segRows = keyed
       .select("term", "shard", "salt", "docId", "tf", "positions", "weight")
       .as[(String, Int, Int, Long, Int, Array[Int], Int)]
-      .mapPartitions { it =>
+      .mapPartitions { sorted =>
         val partId = org.apache.spark.TaskContext.getPartitionId()
         val t0 = System.nanoTime()
         var nTerms = 0L; var nPostings = 0L; var nBytes = 0L
-        val out = new scala.collection.mutable.ArrayBuffer[SegmentRow]()
-        var curKey: (String, Int, Int) = null
-        var pending = new scala.collection.mutable.ArrayBuffer[Posting]()
-        def flush(): Unit = {
-          if (curKey != null && pending.nonEmpty) {
-            val (blocks, df, cf) = PostingCodec.encode(pending.iterator, withPos, withW)
+        val it = sorted.buffered
+        val runs = new Iterator[SegmentRow] {
+          def hasNext: Boolean = it.hasNext
+          def next(): SegmentRow = {
+            val head = it.head
+            val term = head._1; val shard = head._2; val salt = head._3
+            val run = new Iterator[Posting] {
+              def hasNext: Boolean = it.hasNext && {
+                val h = it.head
+                h._3 == salt && h._2 == shard && h._1 == term
+              }
+              def next(): Posting = { val r = it.next(); Posting(r._4, r._5, r._6, r._7) }
+            }
+            val (blocks, df, cf) = PostingCodec.encode(run, withPos, withW)
             val rows = blocks.map(b => BlockRow(b.firstDoc, b.lastDoc, b.n, b.maxTf, b.data))
-            out += SegmentRow(curKey._2, curKey._1, curKey._3, df, cf, rows)
             nTerms += 1; nPostings += df
             nBytes += rows.map(_.data.length.toLong).sum
-            pending = new scala.collection.mutable.ArrayBuffer[Posting]()
+            SegmentRow(shard, term, salt, df, cf, rows)
           }
         }
-        new Iterator[SegmentRow] {
-          private var finished = false
-          private def fill(): Unit = {
-            while (out.isEmpty && it.hasNext) {
-              val (term, shard, salt, docId, tf, positions, weight) = it.next()
-              val key = (term, shard, salt)
-              if (curKey == null) curKey = key
-              else if (key != curKey) { flush(); curKey = key }
-              pending += Posting(docId, tf, positions, weight)
-            }
-            if (out.isEmpty && !it.hasNext && !finished) {
-              flush()
-              finished = true
-              metricsAcc.add((partId, nTerms, nPostings, nBytes,
-                (System.nanoTime() - t0) / 1000000L))
-            }
-          }
-          def hasNext: Boolean = { fill(); out.nonEmpty }
-          def next(): SegmentRow = { fill(); out.remove(0) }
+        runs ++ {
+          metricsAcc.add((partId, nTerms, nPostings, nBytes, (System.nanoTime() - t0) / 1000000L))
+          Iterator.empty
         }
       }
     segRows.toDF()
@@ -538,9 +529,7 @@ object IndexBuilder {
 
     // lineage metrics (driver-side tiny write; dedupe retried tasks)
     import scala.jdk.CollectionConverters._
-    val metricRows = metricsAcc.value.asScala.toSeq
-      .groupBy(_._1).map(_._2.head).toSeq
-      .map { case (p, t, po, b, e) => (p, t, po, b, e) }
+    val metricRows = metricsAcc.value.asScala.toSeq.groupBy(_._1).map(_._2.head).toSeq
     spark.createDataset(metricRows)
       .toDF("partitionId", "terms", "postings", "bytes", "elapsedMs")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/metrics")

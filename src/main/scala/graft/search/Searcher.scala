@@ -128,9 +128,12 @@ object Searcher {
       kind: MatchKind,
       deleted: Long => Boolean = _ => false
   ): Iterator[(Long, Int, Int)] = {
-    val byTerm: Map[String, Array[Posting]] =
-      segRows.groupBy(_.term).map { case (t, rs) => t -> mergeSalts(rs, withPos) }
     val uniq = qtoks.groupBy(_.term).toSeq // (term, offsets-with-dups)
+    // one distinct token at one offset: its count is the posting's tf, so
+    // no alignment reads positions
+    val singleTerm = uniq.size == 1 && uniq.head._2.size == 1
+    val byTerm: Map[String, Array[Posting]] =
+      segRows.groupBy(_.term).map { case (t, rs) => t -> mergeSalts(rs, withPos && !singleTerm) }
     if (uniq.exists { case (t, _) => !byTerm.contains(t) }) return Iterator.empty
     // rarest-first: drive from the smallest per-shard posting list
     val lists = uniq.map { case (t, qs) => (qs.map(_.offset).toArray, byTerm(t)) }
@@ -144,7 +147,6 @@ object Searcher {
     // each term's posting in the current doc, in `lists` order
     val hit = new Array[Posting](lists.length)
     val out = Vector.newBuilder[(Long, Int, Int)]
-    val singleTerm = others.isEmpty && offsets(0).length == 1
 
     var i = 0
     while (i < driver.length) {
