@@ -184,7 +184,8 @@ object IndexBuilder {
         .withColumn("weight", lit(0)),
       // a dedicated counting pass (tokenize only: no combine, no posting
       // rows; one int row per doc reaches the by-shard shuffle), keyed by
-      // the shard the docs stage stored
+      // the shard the docs stage stored. A doc without tokens gets no entry,
+      // as under buildFromPostings' Σ tf: it has no postings to score.
       doclens = docs => docs.select("shard", "docId", "content").as[(Int, Long, String)]
         .mapPartitions { iter =>
           val tok = Tokenizers.byName(tokName)
@@ -199,7 +200,7 @@ object IndexBuilder {
             // the postings pass's tokenization, so doclen = Σ tf
             DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
             (shard, docId, counter.n)
-          }
+          }.filter(_._3 > 0)
         })
   }
 
@@ -283,7 +284,10 @@ object IndexBuilder {
       doclens = _ => live(union("norms").as[(Int, Array[Byte])]
         .flatMap { case (shard, blob) =>
           val norms = graft.codec.Norms.decode(blob)
-          norms.docIds.indices.map(i => (shard, norms.docIds(i), norms.lens(i)))
+          // a stored index may hold doclen-0 entries for docs without
+          // tokens (earlier builds wrote them); a fresh build writes none
+          norms.docIds.indices.filter(norms.lens(_) > 0)
+            .map(i => (shard, norms.docIds(i), norms.lens(i)))
         }
         .toDF("shard", "docId", "doclen"))
         // the anti-join puts docId first; the tuple reads columns by position

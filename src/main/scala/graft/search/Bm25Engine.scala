@@ -3,14 +3,16 @@ package graft.search
 import graft.codec.PostingCodec
 import graft.index.{IndexReader, SegmentRow}
 
-/** One term's postings on one shard, decoded once for scoring: docIds and
-  * tfs in primitive arrays (no positions, no [[graft.core.Posting]] per
-  * entry), cut into the blocks whose headers bound WAND's scores. A
-  * single-salt term keeps its stored blocks; a salted (hot) term's sub-lists
-  * are merged by docId and re-blocked at [[PostingCodec.BlockSize]], the
-  * blocks [[PostingCodec.encode]] would write for the merged list — so block
-  * bounds, and WAND's pruning, are those of the stored index. Immutable once
-  * built: any number of cursors, on any threads, walk one list.
+/** One term's postings, decoded once for scoring: on one shard for the
+  * distributed path, over every shard in [[LocalServing]]. DocIds and tfs
+  * sit in primitive arrays (no positions, no [[graft.core.Posting]] per
+  * entry), cut into the blocks whose headers bound WAND's scores. A list
+  * from one segment row keeps its stored blocks; the rows of a salted (hot)
+  * term, or of several shards, are merged by docId and re-blocked at
+  * [[PostingCodec.BlockSize]], the blocks [[PostingCodec.encode]] would
+  * write for the merged list — so block bounds, and WAND's pruning, are
+  * those of the stored index. Immutable once built: any number of cursors,
+  * on any threads, walk one list.
   *
   * @param blockEnd   exclusive end index of each block in docIds/tfs
   * @param blockLast  last docId of each block (the skip key)
@@ -47,7 +49,9 @@ object PostingList {
   /** blockEnd (4) + blockLast (8) + blockMaxTf (4) + suffixMaxTf (4). */
   val BytesPerBlock = 20L
 
-  /** The list of one (shard, term) from its segment rows, one per salt. */
+  /** The list of one term from its segment rows: one shard's salts, or
+    * every (shard, salt) row of the term.
+    */
   def of(rows: Seq[SegmentRow]): PostingList =
     if (rows.size == 1) stored(rows.head) else merged(rows)
 
@@ -66,30 +70,32 @@ object PostingList {
     new PostingList(ids, tfs, bs.map(_.n).scanLeft(0)(_ + _).tail, bs.map(_.lastDoc), bs.map(_.maxTf))
   }
 
-  // k-way merge of the salts' docId-ascending runs (equal docIds keep row
-  // order, as Searcher.mergeSalts's stable sort does), then fixed-size blocks
   private def merged(rows: Seq[SegmentRow]): PostingList = {
-    val runs = rows.map(decodeRow).toArray
-    val runIds = runs.map(_._1)
-    val runTfs = runs.map(_._2)
-    val at = new Array[Int](runs.length)
-    val n = runIds.map(_.length).sum
-    val ids = new Array[Long](n)
-    val tfs = new Array[Int](n)
-    var o = 0
-    while (o < n) {
-      var best = -1
-      var r = 0
-      while (r < runIds.length) {
-        if (at(r) < runIds(r).length && (best < 0 || runIds(r)(at(r)) < runIds(best)(at(best)))) best = r
-        r += 1
-      }
-      ids(o) = runIds(best)(at(best))
-      tfs(o) = runTfs(best)(at(best))
-      at(best) += 1
-      o += 1
-    }
+    val (ids, tfs) = mergeRuns(rows.map(decodeRow))
     blocked(ids, tfs)
+  }
+
+  // docId-ascending (docIds, values) runs merged pairwise, log2(runs) rounds
+  // of O(n) each; equal docIds keep run order, as Searcher.mergeSalts's
+  // stable sort keeps row order
+  private[search] def mergeRuns(runs: Seq[(Array[Long], Array[Int])]): (Array[Long], Array[Int]) =
+    if (runs.isEmpty) (Array.emptyLongArray, Array.emptyIntArray)
+    else if (runs.size == 1) runs.head
+    else mergeRuns(runs.grouped(2).map(p => if (p.size == 1) p.head else merge2(p(0), p(1))).toVector)
+
+  private def merge2(a: (Array[Long], Array[Int]), b: (Array[Long], Array[Int])): (Array[Long], Array[Int]) = {
+    val (aIds, aVs) = a
+    val (bIds, bVs) = b
+    val ids = new Array[Long](aIds.length + bIds.length)
+    val vs = new Array[Int](ids.length)
+    var i = 0
+    var j = 0
+    while (i + j < ids.length) {
+      if (j == bIds.length || (i < aIds.length && aIds(i) <= bIds(j))) {
+        ids(i + j) = aIds(i); vs(i + j) = aVs(i); i += 1
+      } else { ids(i + j) = bIds(j); vs(i + j) = bVs(j); j += 1 }
+    }
+    (ids, vs)
   }
 
   /** The list of docId-ascending `ids` and their `tfs`, cut into blocks of
@@ -210,13 +216,14 @@ object Bm25Plan {
   }
 }
 
-/** Disjunctive top-k BM25 over one shard: exhaustive term-at-a-time (the
-  * rank-identity oracle) and document-at-a-time block-max WAND (Ding & Suel,
-  * SIGIR 2011), run in two phases (the scale path). Every path scores into a
-  * [[Bm25Shard.TopK]] the caller owns and sums per-doc contributions in
-  * termIdx order so floats are bit-identical; WAND prunes only when the
-  * upper bound is strictly below the current threshold, preserving score
-  * ties.
+/** Disjunctive top-k BM25 over one docId-ascending list set (one shard on
+  * the distributed path, the whole index in [[LocalServing]]): exhaustive
+  * term-at-a-time (the rank-identity oracle) and document-at-a-time
+  * block-max WAND (Ding & Suel, SIGIR 2011), run in two phases (the scale
+  * path). Every path scores into a [[Bm25Shard.TopK]] the caller owns and
+  * sums per-doc contributions in termIdx order so floats are bit-identical;
+  * WAND prunes only when the upper bound is strictly below the current
+  * threshold, preserving score ties.
   *
   * The two phases seed WAND's threshold with exact scores (an exact initial
   * threshold, Kane & Tompa, SIGIR 2018). Phase 1 ([[scoreSeed]]) offers
@@ -245,8 +252,7 @@ object Bm25Shard {
   /** One query's top-k state: the k best documents offered so far and θ,
     * the k-th best score once k are held (−∞ before). θ comes only from
     * held documents, so pruning on it never drops one of the final answer.
-    * Shared by every shard a query walks, θ carries across shards as over
-    * Groonga's single docid space. Not thread-safe: one query, one thread.
+    * Not thread-safe: one query, one thread.
     */
   final class TopK(k: Int) {
     // head = max under resultOrdering = the weakest held doc, next to evict
@@ -308,13 +314,10 @@ object Bm25Shard {
   }
 
   /** Phase 1: offer every live document of the seed term ([[Bm25Plan.seed]])
-    * on this shard with its exact score. The other terms' tfs come from their
-    * cursors' `advanceTo` (the seed's docIds ascend), summed in termIdx order
-    * as WAND's evaluate step sums them. No-op without a seed on the shard.
-    * `lists` holds the shard's list of each term by termIdx, null where the
-    * shard holds none. A walk over many shards into one `top` runs this on
-    * every shard before [[scoreRest]] on any, so phase 2 starts at the θ of
-    * all the seed's documents.
+    * with its exact score. The other terms' tfs come from their cursors'
+    * `advanceTo` (the seed's docIds ascend), summed in termIdx order as
+    * WAND's evaluate step sums them. No-op without a seed in `lists`,
+    * which holds each term's list by termIdx, null where there is none.
     */
   def scoreSeed(
       lists: Array[PostingList],
@@ -344,9 +347,9 @@ object Bm25Shard {
     }
   }
 
-  /** Phase 2: block-max WAND over this shard's lists other than the seed's,
-    * skipping the seed's documents, which [[scoreSeed]] offered. Without a
-    * seed (a single-term query) it is plain [[wand]] over every list.
+  /** Phase 2: block-max WAND over the lists other than the seed's, skipping
+    * the seed's documents, which [[scoreSeed]] offered. Without a seed (a
+    * single-term query) it is plain [[wand]] over every list.
     */
   def scoreRest(
       lists: Array[PostingList],

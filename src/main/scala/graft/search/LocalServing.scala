@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.codec.Norms
-import graft.index.IndexReader
+import graft.index.{IndexReader, SegmentRow}
 import org.apache.spark.sql.Dataset
 
 /** Driver-local BM25 serving over a warmed reader — the Spark-free analogue
@@ -12,43 +12,49 @@ import org.apache.spark.sql.Dataset
   * submission, no shuffle — latency is the postings walk itself (~µs-ms),
   * not Spark scheduling (~100 ms+).
   *
-  * Scale honesty (100 TB): this is the PER-SHARD-SERVER loop, not a driver
+  * Scale honesty (100 TB): this is one serving node's loop, not a driver
   * funnel. Cost and memory are ∝ the query terms' postings (bounded by the
   * LRU budget), never ∝ the index. A term whose estimated postings exceed
   * the budget falls back to the distributed [[Engine.bm25TopK]] — correct
   * on any input, fast on the serving working set. At web scale the corpus
-  * is sharded across serving nodes, each running exactly this loop over its
-  * shard group; the Spark path remains for batch analytics.
+  * is split across serving nodes, each running exactly this loop over its
+  * own index; the Spark path remains for batch analytics.
   *
   * Rank identity: the cursors, WAND kernel, and (score desc, docId asc)
   * ordering are the SAME code objects as the distributed path, so results
   * are bit-identical (LocalServingSpec pins equality, fallback included).
   *
-  * One top-k per query, seeded: all shards score into one
-  * [[Bm25Shard.TopK]], as over Groonga's single docid space, in the two
-  * phases of [[Bm25Shard]]. Phase 1 ([[Bm25Shard.scoreSeed]]) runs on every
-  * shard first and offers each live document of the query's rarest term
-  * with its exact score; phase 2 ([[Bm25Shard.scoreRest]]) then walks the
-  * other terms with block-max WAND on every shard, skipping the documents
-  * phase 1 offered. Exact: a document holding the seed term was offered once
-  * with its full score, and every other document scores from the other terms
-  * alone, which phase 2 covers as WAND always does. On a hot+rare query θ is
-  * the k-th rare-document score before any hot posting is read, so the hot
-  * lists are skipped rather than scored. Before the seed phase, θ carried
-  * from shard to shard but stayed at a hot-only score until k rare
-  * documents were held, which with about one rare document per shard took
-  * a third of the 64 shards. On perfbench `serve_local` (seed 7001, k = 10)
-  * `return oscfv` scored 4,220 documents before and 34 after; over 10
-  * paired seeds on a 4-core host, queries/s closed loop went from 10.9k to
-  * 24.8k and open-loop p50 from 0.495 to 0.352 ms (medians).
+  * One walk per query over one docId space: as Groonga keeps one posting
+  * list per term over its table's record ids, each cached term is one list
+  * over every shard and every document's length is in one lookup. Shards
+  * are the distributed path's unit of parallelism and play no part here, so
+  * a query runs the two phases of [[Bm25Shard]] once, into one
+  * [[Bm25Shard.TopK]]. Phase 1 ([[Bm25Shard.scoreSeed]]) offers each live
+  * document of the query's rarest term with its exact score; phase 2
+  * ([[Bm25Shard.scoreRest]]) then walks the other terms with block-max WAND,
+  * skipping the documents phase 1 offered. Exact: a document holding the
+  * seed term was offered once with its full score, and every other document
+  * scores from the other terms alone, which phase 2 covers as WAND always
+  * does. On a hot+rare query θ is the k-th rare-document score before any
+  * hot posting is read, so the hot lists are skipped rather than scored. On
+  * perfbench `serve_local` (seed 7001, k = 10) the seed phase took
+  * `return oscfv` from 4,220 documents scored to 34; over 10 paired seeds on
+  * a 4-core host, queries/s closed loop went from 10.9k to 24.8k and
+  * open-loop p50 from 0.495 to 0.352 ms (medians). Walking one list per
+  * term instead of one per shard (64 there) went, over 10 paired seeds
+  * (3101-3110, same host), from 43.1k to 47.9k queries/s (7 of 10 pairs)
+  * and from 0.183 to 0.154 ms p50 (8 of 10), medians — short of the 9 in
+  * 10 wins a gain needs; and the documents a query scores no longer depend
+  * on how the index is sharded (LocalServingLayoutSpec).
   *
-  * The cache holds decoded lists: per term, one [[PostingList]] per shard,
-  * decoded and salt-merged once at fetch. A warm query decodes nothing and
-  * allocates no posting; its cursors walk primitive arrays. Against caching
-  * the encoded blocks and decoding them on every query, perfbench
-  * `serve_local` (16k files, 64 shards, 4-core host, 10 paired seeds) went
-  * from 29.7k to 45.4k queries/s closed loop and from 0.134 to 0.103 ms
-  * open-loop p50 (medians); the cache holds about twice the bytes.
+  * The cache holds decoded lists: per term, one [[PostingList]], decoded
+  * and merged across shards and salts once at fetch. A warm query decodes
+  * nothing and allocates no posting; its cursors walk primitive arrays.
+  * Against caching the encoded blocks and decoding them on every query,
+  * perfbench `serve_local` (16k files, 64 shards, 4-core host, 10 paired
+  * seeds, one cached list per shard then) went from 29.7k to 45.4k
+  * queries/s closed loop and from 0.134 to 0.103 ms open-loop p50
+  * (medians); the cache holds about twice the bytes.
   *
   * A LocalServing instance is bound to one reader snapshot — rebuild or
   * compaction means a new reader and a new instance (same epoch discipline
@@ -64,17 +70,10 @@ final class LocalServing(
 ) {
   require(maxCachedBytes > 0, "maxCachedBytes must be positive")
 
-  private val nShards = reader.manifest.nShards
+  // the list of a term with no postings
+  private val noPostings = PostingList.of(Nil)
 
-  /** Cached postings of one term: its decoded list on each shard, indexed by
-    * shard id (null where the shard holds none of it).
-    */
-  private final class Entry(val byShard: Array[PostingList]) {
-    val bytes: Long = byShard.iterator.filter(_ != null).map(_.bytes).sum
-  }
-  private val noPostings = new Entry(new Array[PostingList](nShards))
-
-  private val cache = new java.util.LinkedHashMap[String, Entry](64, 0.75f, true)
+  private val cache = new java.util.LinkedHashMap[String, PostingList](64, 0.75f, true)
   private var cachedBytes = 0L
   private val hitCount = new java.util.concurrent.atomic.AtomicLong
   private val missCount = new java.util.concurrent.atomic.AtomicLong
@@ -100,36 +99,21 @@ final class LocalServing(
   /** Terms permanently routed to the distributed path (postings > budget). */
   def oversizedTerms: Int = oversized.size
 
-  /** One-row ops snapshot — cache effectiveness and fallback pressure for
-    * dashboards/alerts (the reference surfaces the same through its
-    * status command's cache_hit_rate).
-    */
-  def metrics(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    Seq((hits, misses, fallbacks, cachedBytesNow, oversizedTerms.toLong))
-      .toDF("hits", "misses", "fallbacks", "cached_bytes", "oversized_terms")
-  }
-
   /** Bytes per posting for the pre-fetch budget check: a decoded list's
     * [[PostingList.bytes]], with its per-block arrays (20 bytes per 128
     * postings) rounded up to one byte per posting.
     */
   private val estBytesPerPosting = PostingList.BytesPerPosting + 1
 
-  /** Per-shard decoded norms, built once per shard on first use — decoding
-    * the varint blob per query would dominate the postings walk. One int
-    * per doc of the shard: the same footprint the executor-side broadcast
-    * already pays, held once per serving process.
+  /** Every document's length, decoded from the per-shard blobs and merged
+    * by docId once, on first use — decoding the varint blobs per query
+    * would dominate the postings walk. Twelve bytes per doc (docId and
+    * length), held once per serving process.
     */
-  private val normsCache = new java.util.concurrent.atomic.AtomicReferenceArray[Norms.Lookup](nShards)
-  private def normsFor(shard: Int): Norms.Lookup = {
-    var n = normsCache.get(shard)
-    if (n == null) {
-      // two threads racing on a cold shard both decode; either result is right
-      n = Norms.decode(reader.normsBroadcast.value(shard))
-      normsCache.set(shard, n)
-    }
-    n
+  private lazy val norms: Norms.Lookup = {
+    val (ids, lens) = PostingList.mergeRuns(reader.normsBroadcast.value.values.toSeq
+      .map { blob => val l = Norms.decode(blob); (l.docIds, l.lens) })
+    new Norms.Lookup(ids, lens)
   }
 
   private def evictTo(budget: Long): Unit = {
@@ -149,7 +133,7 @@ final class LocalServing(
     */
   private def postingsFor(
       terms: Seq[String],
-      dfs: Map[String, Long]): Option[Array[Entry]] = {
+      dfs: Map[String, Long]): Option[Array[PostingList]] = {
     if (terms.exists(oversized.contains)) { fallbackCount.incrementAndGet(); return None }
     val missing = synchronized { terms.filterNot(cache.containsKey) }
     val estMissing = missing.map(t => dfs.getOrElse(t, 0L) * estBytesPerPosting).sum
@@ -158,33 +142,27 @@ final class LocalServing(
     // fetch + decode outside the lock; two threads racing on the same
     // term fetch twice and the second insert is a no-op — correct, and far
     // cheaper than serializing all hits behind the job
-    val fetched: Seq[(String, Entry)] =
+    val fetched: Seq[(String, PostingList)] =
       if (missing.isEmpty) Seq.empty
       else {
         missCount.addAndGet(missing.size.toLong)
-        val rows = reader.segmentsFor(missing).collect()
-        val byTerm = rows.groupBy(_.term)
-        missing.map { t =>
-          val byShard = new Array[PostingList](nShards)
-          byTerm.getOrElse(t, Array.empty[graft.index.SegmentRow]).groupBy(_.shard)
-            .foreach { case (sh, rs) => byShard(sh) = PostingList.of(rs.toSeq) }
-          t -> new Entry(byShard)
-        }
+        val byTerm = reader.segmentsFor(missing).collect().groupBy(_.term)
+        missing.map(t => t -> PostingList.of(byTerm.getOrElse(t, Array.empty[SegmentRow]).toSeq))
       }
 
     synchronized {
-      fetched.foreach { case (t, e) =>
-        if (e.bytes > maxCachedBytes) oversized.add(t): Unit
+      fetched.foreach { case (t, list) =>
+        if (list.bytes > maxCachedBytes) oversized.add(t): Unit
         else if (!cache.containsKey(t)) {
-          cache.put(t, e)
-          cachedBytes += e.bytes
+          cache.put(t, list)
+          cachedBytes += list.bytes
         }
       }
       evictTo(maxCachedBytes)
       val got = terms.map { t =>
-        val e = cache.get(t)
+        val list = cache.get(t)
         // a term with no postings needs no entry
-        if (e == null && dfs.getOrElse(t, 0L) == 0L) noPostings else e
+        if (list == null && dfs.getOrElse(t, 0L) == 0L) noPostings else list
       }.toArray
       hitCount.addAndGet((terms.size - missing.size).toLong)
       // a term can be oversized, or evicted by a same-call sibling before
@@ -206,29 +184,11 @@ final class LocalServing(
         // distributed fallback: same kernel, cluster-side
         Engine.bm25TopK(reader, text, k, useWand = true, bm25 = bm25)
           .collect().toSeq.sorted(Bm25Shard.resultOrdering)
-      case Some(entries) =>
+      case Some(lists) =>
         val deleted = reader.deletedIds
         val top = new Bm25Shard.TopK(k)
-        val lists = new Array[PostingList](entries.length)
-        // phase 1 on every shard before phase 2 on any: the WAND walk starts
-        // at the θ of all the seed term's documents
-        for (phase <- 1 to 2) {
-          var sh = 0
-          while (sh < nShards) {
-            var any = false
-            var t = 0
-            while (t < entries.length) {
-              lists(t) = entries(t).byShard(sh)
-              any |= lists(t) != null
-              t += 1
-            }
-            if (any) {
-              if (phase == 1) Bm25Shard.scoreSeed(lists, normsFor(sh).apply, plan, top, deleted)
-              else Bm25Shard.scoreRest(lists, normsFor(sh).apply, plan, top, deleted)
-            }
-            sh += 1
-          }
-        }
+        Bm25Shard.scoreSeed(lists, norms.apply, plan, top, deleted)
+        Bm25Shard.scoreRest(lists, norms.apply, plan, top, deleted)
         docsScoredCount.addAndGet(top.scored)
         top.result
     }

@@ -31,13 +31,13 @@ class BuildPipelineSpec extends AnyFunSuite {
 
   private def tmp(name: String) =
     java.nio.file.Files.createTempDirectory(s"graft_pipe_${name}_").toString
-  private def docsDf(ids: Set[Long]): DataFrame = {
+  private def docsDf(ids: Set[Long], corpus: Seq[(Long, String)] = docs): DataFrame = {
     import spark.implicits._
-    docs.filter(d => ids(d._1)).toDF("docId", "content")
+    corpus.filter(d => ids(d._1)).toDF("docId", "content")
   }
-  private def postingsDf(ids: Set[Long]): DataFrame = {
+  private def postingsDf(ids: Set[Long], corpus: Seq[(Long, String)] = docs): DataFrame = {
     import spark.implicits._
-    docs.filter(d => ids(d._1)).flatMap { case (docId, content) =>
+    corpus.filter(d => ids(d._1)).flatMap { case (docId, content) =>
       DocCombiner.docPostings(Tokenizers.byName(cfg.tokenizerName),
         new DocCombiner(cfg.withPositions), docId, content).toSeq
     }.toDF("term", "docId", "tf", "positions")
@@ -158,5 +158,42 @@ class BuildPipelineSpec extends AnyFunSuite {
     assert((lexicon(out), norms(out), segments(out), manifest(out)) == before)
     // the docs, lexicon and norms stages were skipped, not rewritten
     assert(Seq("docs", "lexicon", "norms").map(files) == kept)
+  }
+
+  test("a document without tokens has no norms entry, in build, buildFromPostings and compaction") {
+    import spark.implicits._
+    // "", null and U+FFFE-only content have no tokens
+    val corpus = Seq(0L -> "the fox", 1L -> "", 2L -> null, 3L -> "\uFFFE\uFFFE", 4L -> "a dog")
+    val ids = corpus.map(_._1).toSet
+    val dirB = tmp("zb")
+    val dirP = tmp("zp")
+    val m = IndexBuilder.build(spark, docsDf(ids, corpus), dirB, cfg)
+    IndexBuilder.buildFromPostings(spark, docsDf(ids, corpus), postingsDf(ids, corpus), dirP, cfg)
+    assert(m.numDocs == 5 && m.totalTokens == 4)
+    def entries(d: String) = norms(d).flatMap { case (_, blob) =>
+      val l = graft.codec.Norms.decode(blob.toArray)
+      l.docIds.toSeq.zip(l.lens.toSeq)
+    }.sorted
+    assert(entries(dirB) == Seq(0L -> 2, 4L -> 2))
+    assert(lexicon(dirP) == lexicon(dirB))
+    assert(norms(dirP) == norms(dirB))
+    assert(segments(dirP) == segments(dirB))
+
+    // a base whose norms hold doclen-0 entries for its token-less docs 1
+    // and 2, as an index may store them, compacted with a delta
+    val (base, delta) = (tmp("zbase"), tmp("zdelta"))
+    IndexBuilder.build(spark, docsDf(Set(0L, 1L, 2L), corpus), base, cfg)
+    IndexBuilder.build(spark, docsDf(Set(3L, 4L), corpus), delta, cfg)
+    val stored = norms(base).map { case (sh, blob) => sh -> graft.codec.Norms.decode(blob.toArray) }.toMap
+    val withZeros = (0 until cfg.nShards).map { sh =>
+      val kept = stored.get(sh).toSeq.flatMap(l => l.docIds.toSeq.zip(l.lens.toSeq))
+      val zeros = Seq(1L, 2L).filter(d => d % cfg.nShards == sh && !kept.exists(_._1 == d)).map(_ -> 0)
+      (sh, graft.codec.Norms.encode((kept ++ zeros).sorted.iterator))
+    }
+    withZeros.toDF("shard", "norms").write.mode("overwrite").parquet(s"$base/norms")
+    assert(entries(base) == Seq(0L -> 2, 1L -> 0, 2L -> 0))
+    val merged = tmp("zmerged")
+    IncrementalIndex.compact(spark, Seq(base, delta), merged)
+    assertSameIndex(merged, dirB)
   }
 }
