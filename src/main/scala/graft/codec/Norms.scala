@@ -7,7 +7,7 @@ package graft.codec
   */
 object Norms {
   def encode(sorted: Iterator[(Long, Int)]): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream()
+    val buf = new Varint.Buf
     var prev = 0L
     sorted.foreach { case (docId, len) =>
       Varint.write(buf, docId - prev)

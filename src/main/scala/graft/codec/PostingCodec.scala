@@ -7,7 +7,22 @@ import graft.core.Posting
   * non-negative deltas so unsigned is enough.
   */
 object Varint {
-  def write(buf: java.io.ByteArrayOutputStream, v0: Long): Unit = {
+  /** Growable byte buffer whose writes take no lock (`java.io.ByteArrayOutputStream.write(int)`
+    * is `synchronized`), reused across payloads through [[reset]].
+    */
+  final class Buf extends java.io.OutputStream {
+    private var bytes = new Array[Byte](256)
+    private var n = 0
+    def write(b: Int): Unit = {
+      if (n == bytes.length) bytes = java.util.Arrays.copyOf(bytes, n * 2)
+      bytes(n) = b.toByte
+      n += 1
+    }
+    def reset(): Unit = n = 0
+    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(bytes, n)
+  }
+
+  def write(buf: java.io.OutputStream, v0: Long): Unit = {
     var v = v0
     require(v >= 0, s"varint requires non-negative value, got $v")
     while ((v & ~0x7fL) != 0) {
@@ -62,80 +77,70 @@ object PostingCodec {
   private val FlagPositions = 1
   private val FlagWeights = 2
 
-  /** Encode rid-ascending postings into blocks. Input MUST be sorted by docId
-    * ascending and duplicate-free (the build pipeline guarantees this via
-    * sortWithinPartitions). Returns (blocks, df, cf).
+  /** Encode rid-ascending postings into blocks: collects them into a
+    * [[PostingBuffer]] and runs the buffer kernel. Input MUST be sorted by
+    * docId ascending and duplicate-free. Returns (blocks, df, cf).
     */
   def encode(
       sorted: Iterator[Posting],
       withPositions: Boolean,
       withWeights: Boolean = false
   ): (Vector[PostingBlock], Long, Long) = {
-    val blocks = Vector.newBuilder[PostingBlock]
-    var df = 0L
-    var cf = 0L
-    val pending = new scala.collection.mutable.ArrayBuffer[Posting](BlockSize)
-    val flags = (if (withPositions) FlagPositions else 0) | (if (withWeights) FlagWeights else 0)
+    val list = new PostingBuffer(withPositions, withWeights)
+    sorted.foreach(p => list.add(p.docId, p.tf, p.positions, p.weight))
+    encode(list, new Varint.Buf)
+  }
 
-    def flush(): Unit = {
-      if (pending.isEmpty) return
-      val first = pending.head.docId
-      val last = pending.last.docId
-      val buf = new java.io.ByteArrayOutputStream(pending.length * 4)
-      buf.write(flags)
-      Varint.write(buf, pending.length.toLong)
-      var prev = first
-      var i = 0
-      while (i < pending.length) {
-        Varint.write(buf, pending(i).docId - prev)
-        prev = pending(i).docId
+  /** The one block encoder: `list`'s postings in blocks of ≤ [[BlockSize]],
+    * each payload written through the reused `out`. Returns (blocks, df, cf).
+    */
+  def encode(list: PostingBuffer, out: Varint.Buf): (Vector[PostingBlock], Long, Long) = {
+    val blocks = Vector.newBuilder[PostingBlock]
+    val flags = (if (list.withPositions) FlagPositions else 0) | (if (list.withWeights) FlagWeights else 0)
+    val docIds = list.docIds
+    val tfs = list.tfs
+    var from = 0
+    while (from < list.size) {
+      val until = math.min(from + BlockSize, list.size)
+      out.reset()
+      out.write(flags)
+      Varint.write(out, (until - from).toLong)
+      var prev = docIds(from)
+      var i = from
+      while (i < until) {
+        Varint.write(out, docIds(i) - prev)
+        prev = docIds(i)
         i += 1
       }
       var maxTf = 0
-      i = 0
-      while (i < pending.length) {
-        val tf = pending(i).tf
-        if (tf > maxTf) maxTf = tf
-        Varint.write(buf, (tf - 1).toLong)
+      i = from
+      while (i < until) {
+        if (tfs(i) > maxTf) maxTf = tfs(i)
+        Varint.write(out, (tfs(i) - 1).toLong)
         i += 1
       }
-      if (withWeights) {
-        i = 0
-        while (i < pending.length) {
-          Varint.write(buf, pending(i).weight.toLong)
-          i += 1
-        }
+      if (list.withWeights) {
+        i = from
+        while (i < until) { Varint.write(out, list.weights(i).toLong); i += 1 }
       }
-      if (withPositions) {
-        i = 0
-        while (i < pending.length) {
-          val ps = pending(i).positions
+      if (list.withPositions) {
+        val ps = list.positions
+        var j = if (from == 0) 0 else list.posEnd(from - 1)
+        i = from
+        while (i < until) {
           var prevPos = 0
-          var j = 0
-          while (j < ps.length) {
-            Varint.write(buf, (ps(j) - prevPos).toLong)
+          while (j < list.posEnd(i)) {
+            Varint.write(out, (ps(j) - prevPos).toLong)
             prevPos = ps(j)
             j += 1
           }
           i += 1
         }
       }
-      blocks += PostingBlock(first, last, pending.length, maxTf, buf.toByteArray)
-      pending.clear()
+      blocks += PostingBlock(docIds(from), docIds(until - 1), until - from, maxTf, out.toByteArray)
+      from = until
     }
-
-    var lastDoc = -1L
-    while (sorted.hasNext) {
-      val p = sorted.next()
-      require(p.docId > lastDoc, s"postings must be strictly docId-ascending: ${p.docId} after $lastDoc")
-      lastDoc = p.docId
-      df += 1
-      cf += p.tf
-      pending += p
-      if (pending.length >= BlockSize) flush()
-    }
-    flush()
-    (blocks.result(), df, cf)
+    (blocks.result(), list.size.toLong, list.cf)
   }
 
   /** Decode one block; the payload's flag byte selects the streams, so no
@@ -194,4 +199,46 @@ object PostingCodec {
 
   def decode(blocks: Seq[PostingBlock], wantPositions: Boolean = true): Iterator[Posting] =
     blocks.iterator.flatMap(b => decodeBlock(b, wantPositions))
+}
+
+/** One term's posting list under construction, in primitive arrays: docIds,
+  * tfs, weights (when `withWeights`) and every posting's positions
+  * flattened into one array (when `withPositions`), appended in strictly
+  * ascending docId order. [[PostingCodec.encode]] writes it as blocks.
+  */
+final class PostingBuffer(val withPositions: Boolean, val withWeights: Boolean) {
+  private[codec] var docIds = new Array[Long](4)
+  private[codec] var tfs = new Array[Int](4)
+  private[codec] var weights: Array[Int] = if (withWeights) new Array[Int](4) else null
+  // posEnd(i): the end of posting i's positions in `positions`
+  private[codec] var posEnd: Array[Int] = if (withPositions) new Array[Int](4) else null
+  private[codec] var positions: Array[Int] = if (withPositions) new Array[Int](8) else null
+  private var n = 0
+  private var nPos = 0
+  private[codec] var cf = 0L
+
+  def size: Int = n
+
+  def add(docId: Long, tf: Int, ps: Array[Int], weight: Int): Unit = {
+    val last = if (n == 0) -1L else docIds(n - 1)
+    require(docId > last, s"postings must be strictly docId-ascending: $docId after $last")
+    if (n == docIds.length) {
+      docIds = java.util.Arrays.copyOf(docIds, n * 2)
+      tfs = java.util.Arrays.copyOf(tfs, n * 2)
+      if (withWeights) weights = java.util.Arrays.copyOf(weights, n * 2)
+      if (withPositions) posEnd = java.util.Arrays.copyOf(posEnd, n * 2)
+    }
+    docIds(n) = docId
+    tfs(n) = tf
+    if (withWeights) weights(n) = weight
+    if (withPositions) {
+      if (nPos + ps.length > positions.length)
+        positions = java.util.Arrays.copyOf(positions, math.max(positions.length * 2, nPos + ps.length))
+      System.arraycopy(ps, 0, positions, nPos, ps.length)
+      nPos += ps.length
+      posEnd(n) = nPos
+    }
+    cf += tf
+    n += 1
+  }
 }

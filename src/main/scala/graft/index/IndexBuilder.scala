@@ -2,7 +2,7 @@ package graft.index
 
 import graft.analysis.Tokenizers
 import graft.codec.{PostingCodec, PostingBlock}
-import graft.core.{Posting, Sha256}
+import graft.core.Sha256
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -12,13 +12,18 @@ import org.apache.spark.sql.functions._
   * @param withPositions store token positions (needed for phrase/NEAR)
   * @param nShards       document shards — the unit of query parallelism; each
   *                      shard holds a complete sub-index for its docId range
-  *                      (scale knob: at 10^12 docs, thousands of shards)
-  * @param buildPartitions shuffle partitions of the (shard,term,salt) encode
-  * @param hotTermDf     df threshold above which a term's postings are salted
-  *                      across `nSalts` sub-lists during the build shuffle
-  *                      (defuses reducer skew on `if`/`return`-class terms);
-  *                      hot terms come EXACTLY from the lexicon stage
-  * @param nSalts        salt fan-out for hot terms
+  *                      (scale knob: at 10^12 docs, thousands of shards). The
+  *                      build inverts one shard per task at a time, holding
+  *                      that shard's decoded postings in memory, so a shard's
+  *                      size bounds a build task's memory
+  * @param buildPartitions shuffle partitions of the segments stage's by-shard
+  *                      shuffle; each holds whole shards
+  * @param hotTermDf     df threshold at or above which a term's per-shard
+  *                      posting list is split into `nSalts` segment rows by a
+  *                      docId hash (it balances no reducer: the segments
+  *                      shuffle is by shard); hot terms come EXACTLY from the
+  *                      lexicon stage
+  * @param nSalts        segment rows per hot term per shard
   */
 final case class IndexConfig(
     tokenizerName: String = "TokenBigram",
@@ -120,13 +125,17 @@ object IndexManifest {
   * Groonga's `grn_ii_build` three-phase pipeline (reference lib/ii.c:8802:
   * tokenize-parse → block spill → key-ordered k-way merge + re-encode):
   *
-  *   phase 1 (parse)  = `flatMap(tokenize)` with per-document local combine,
-  *   phase 2 (spill)  = the shuffle, keyed (shard, term, salt) — hot terms
-  *                      salted by docId hash to defuse reducer skew,
-  *   phase 3 (commit) = `sortWithinPartitions(shard, term, salt, docId)` +
-  *                      streaming `mapPartitions` encoder, one run at a time
-  *                      (`grn_ii_buffer_commit`'s term-at-a-time merge,
-  *                      reference lib/ii.c:8577), producing delta+varint
+  *   phase 1 (parse)  = per-document tokenize with local combine
+  *                      ([[DocCombiner.docPostings]]),
+  *   phase 2 (spill)  = one shuffle of the documents by shard (docId mod
+  *                      nShards), each partition sorted by (shard, docId) —
+  *                      integer keys only; the entry points given postings
+  *                      shuffle those the same way,
+  *   phase 3 (commit) = [[ShardInverter]]: a shard's postings go to
+  *                      per-(term, salt) primitive buffers in docId order
+  *                      (reference lib/ii.c:8721 `grn_ii_buffer_parse`),
+  *                      encoded in key order at the shard's end
+  *                      (lib/ii.c:7713 `encode_terms`) into delta+varint
   *                      blocks with skip entries and block-max tf (the
   *                      chunk/dgap layout of reference lib/ii.c:2659).
   *
@@ -170,8 +179,9 @@ object IndexBuilder {
     // The lexicon, norms and segments stages each re-read the docs parquet
     // and tokenize it again: the build tokenizes the corpus three times. A
     // traced build (perfbench/run.py --workload build --trace 1, seed 801,
-    // 4-core host) reads index.doc_rows_read_per_doc = 3.0. Caching the
-    // postings between the stages instead has not been measured.
+    // 4-core host) reads index.doc_rows_read_per_doc = 3.0. Persisting the
+    // postings once for all three stages instead measured 0.93x this
+    // build's ops_per_s over 6 seed pairs (ROADMAP item 1).
     runStages(spark, docsIn, sha256Of(col("content")), dir, cfg, builtFromContent = true)(
       // one tokenize+combine pass: (term, docId, tf, positions, weight)
       postings = docs => docs.select("docId", "content").as[(Long, String)]
@@ -201,6 +211,17 @@ object IndexBuilder {
             DocCombiner.tokenize(tok, scratch, content, counter)(_ => ())
             (shard, docId, counter.n)
           }.filter(_._3 > 0)
+        },
+      // the documents, not their postings, cross the segments shuffle; each
+      // is tokenized once more on the far side
+      segments = (docs, inv) => byShard(docs.select("shard", "docId", "content"), cfg)
+        .as[(Int, Long, String)]
+        .mapPartitions { sorted =>
+          val tok = Tokenizers.byName(tokName)
+          val comb = new DocCombiner(withPos)
+          inv.rows(sorted)(_._1) { (sink, doc) =>
+            DocCombiner.docPostings(tok, comb, doc._2, doc._3).foreach(p => sink.add(p._1, p._2, p._3, p._4, 0))
+          }
         })
   }
 
@@ -236,7 +257,8 @@ object IndexBuilder {
       doclens = _ => postings
         .withColumn("shard", shardOf(cfg.nShards))
         .groupBy("shard", "docId").agg(sum("tf").cast("int").as("doclen"))
-        .as[(Int, Long, Int)])
+        .as[(Int, Long, Int)],
+      segments = (_, inv) => invertPostings(spark, postings, cfg, inv))
   }
 
   /** Compaction: rewrite the indexes at `dirs` (a base and its deltas, or
@@ -275,12 +297,13 @@ object IndexBuilder {
     def union(part: String): DataFrame = dirs.map(d => spark.read.parquet(s"$d/$part"))
       .reduce(_.unionByName(_, allowMissingColumns = true))
 
+    val postings = live(union("segments").as[SegmentRow]
+      .flatMap(r => PostingCodec.decode(r.blocks.map(_.toBlock), withPos)
+        .map(p => (r.term, p.docId, p.tf, p.positions, p.weight)))
+      .toDF("term", "docId", "tf", "positions", "weight"))
     runStages(spark, live(union("docs")), col("sha256"), outDir, cfg,
       builtFromContent = manifests.forall(_.builtFromContent))(
-      postings = _ => live(union("segments").as[SegmentRow]
-        .flatMap(r => PostingCodec.decode(r.blocks.map(_.toBlock), withPos)
-          .map(p => (r.term, p.docId, p.tf, p.positions, p.weight)))
-        .toDF("term", "docId", "tf", "positions", "weight")),
+      postings = _ => postings,
       doclens = _ => live(union("norms").as[(Int, Array[Byte])]
         .flatMap { case (shard, blob) =>
           val norms = graft.codec.Norms.decode(blob)
@@ -291,7 +314,26 @@ object IndexBuilder {
         }
         .toDF("shard", "docId", "doclen"))
         // the anti-join puts docId first; the tuple reads columns by position
-        .select("shard", "docId", "doclen").as[(Int, Long, Int)])
+        .select("shard", "docId", "doclen").as[(Int, Long, Int)],
+      segments = (_, inv) => invertPostings(spark, postings, cfg, inv))
+  }
+
+  /** `rows` (with `shard` and `docId` columns) laid out for the inverter:
+    * hash-partitioned by shard into `buildPartitions` partitions, so each
+    * shard sits whole in one, and sorted within each by (shard, docId).
+    */
+  private def byShard(rows: DataFrame, cfg: IndexConfig): DataFrame =
+    rows.repartition(cfg.buildPartitions, col("shard")).sortWithinPartitions("shard", "docId")
+
+  // the segments of (term, docId, tf, positions, weight) postings: the
+  // postings cross the by-shard shuffle and go to the inverter as they come
+  private def invertPostings(spark: SparkSession, postings: DataFrame, cfg: IndexConfig,
+      inv: Inversion): Dataset[SegmentRow] = {
+    import spark.implicits._
+    byShard(postings.withColumn("shard", shardOf(cfg.nShards)), cfg)
+      .select("shard", "term", "docId", "tf", "positions", "weight")
+      .as[(Int, String, Long, Int, Array[Int], Int)]
+      .mapPartitions(inv.rows(_)(_._1)((sink, p) => sink.add(p._2, p._3, p._4, p._5, p._6)))
   }
 
   // a stored doc's sha256: the hex digest of `source`; null hashes as "" (a
@@ -310,6 +352,8 @@ object IndexBuilder {
     * @param postings (term, docId, tf, positions, weight) rows, given the
     *                 stored docs
     * @param doclens  (shard, docId, doclen) rows, given the stored docs
+    * @param segments the segment rows, given the stored docs and the
+    *                 segments stage's [[Inversion]]
     */
   private def runStages(
       spark: SparkSession,
@@ -318,7 +362,8 @@ object IndexBuilder {
       dir: String,
       cfg: IndexConfig,
       builtFromContent: Boolean
-  )(postings: DataFrame => DataFrame, doclens: DataFrame => Dataset[(Int, Long, Int)]): IndexManifest = {
+  )(postings: DataFrame => DataFrame, doclens: DataFrame => Dataset[(Int, Long, Int)],
+      segments: (DataFrame, Inversion) => Dataset[SegmentRow]): IndexManifest = {
     import spark.implicits._
     // sidecar files (stage markers, hot terms, manifest) go through the
     // Hadoop FileSystem API so the index dir can be file:/hdfs:/s3a:
@@ -398,7 +443,15 @@ object IndexBuilder {
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/norms")
         markDone("norms")
       }
-      encodeSegmentsStage(spark, postings(docs), dir, cfg, hotTerms)
+      // segments, plus metrics/: one lineage row per partition, deduped by
+      // partitionId against task retries
+      val lineage = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long, Long)]("buildMetrics")
+      segments(docs, new Inversion(cfg, spark.sparkContext.broadcast(hotTerms.toSet), lineage)).toDF()
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/segments")
+      import scala.jdk.CollectionConverters._
+      spark.createDataset(lineage.value.asScala.toSeq.groupBy(_._1).map(_._2.head).toSeq)
+        .toDF("partitionId", "terms", "postings", "bytes", "elapsedMs")
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/metrics")
       markDone("segments")
     }
 
@@ -449,94 +502,46 @@ object IndexBuilder {
       .repartitionByRange(col("term")).sortWithinPartitions("term")
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/lexicon")
 
-  /** The shuffle+encode stage shared by both build entry points.
-    * `postingsW` columns: (term, docId, tf, positions, weight).
-    *
-    * HASH partitioning on (term, shard, salt), sorted within partitions:
-    * hash (not range) because a range partitioner needs a full sampling
-    * pass over the postings — a whole extra evaluation of the corpus at
-    * 10^12-doc scale. All rows of one (term, shard, salt) key still land
-    * in one partition (complete posting sub-lists), hot terms still spread
-    * across `nSalts` reducers, and the within-partition sort keeps every
-    * output file term-clustered so parquet row-group min/max stats prune
-    * query terms. What hash gives up vs range is only cross-FILE term
-    * locality — row-group pruning and the serving-mode in-memory cache make
-    * that immaterial, while the saved pass is a full corpus scan.
-    *
-    * The encoder streams: a run ends where the next row's (term, shard,
-    * salt) differs, [[PostingCodec.encode]] reads the run straight off the
-    * sorted partition, and the run leaves as one [[SegmentRow]]. Past
-    * Spark's sort, the encoder holds one 128-posting block plus the run's
-    * encoded bytes, never a whole run's decoded postings.
+  /** What a segments-stage task needs to run the inverter over its
+    * partition: the config, the hot terms, and the lineage accumulator that
+    * receives each partition's (partitionId, terms, postings, bytes,
+    * elapsedMs) row.
     */
-  private def encodeSegmentsStage(
-      spark: SparkSession,
-      postingsW: DataFrame,
-      dir: String,
+  private[index] final class Inversion(
       cfg: IndexConfig,
-      hotTerms: Array[String]
-  ): Unit = {
-    import spark.implicits._
-    val withPos = cfg.withPositions
-    val withW = cfg.withWeights
-    val hotB = spark.sparkContext.broadcast(hotTerms.toSet)
-    val nSalts = cfg.nSalts
-    val saltUdf = udf { (term: String, docId: Long) =>
-      if (hotB.value.contains(term)) (java.lang.Long.remainderUnsigned(docId * 0x9e3779b97f4a7c15L, nSalts.toLong)).toInt
-      else 0
-    }
-    val keyed = postingsW
-      .withColumn("shard", shardOf(cfg.nShards))
-      .withColumn("salt", saltUdf(col("term"), col("docId")))
-      .repartition(cfg.buildPartitions, col("term"), col("shard"), col("salt"))
-      .sortWithinPartitions("term", "shard", "salt", "docId")
+      hotTerms: org.apache.spark.broadcast.Broadcast[Set[String]],
+      lineage: org.apache.spark.util.CollectionAccumulator[(Int, Long, Long, Long, Long)]
+  ) extends Serializable {
 
-    // one pass over the sorted partition: each (term, shard, salt) run goes
-    // straight into the codec and leaves as one segment row; the
-    // partition's lineage row (tiny; deduped by partitionId against task
-    // retries) is added once the partition is exhausted
-    val metricsAcc = spark.sparkContext.collectionAccumulator[(Int, Long, Long, Long, Long)]("buildMetrics")
-    val segRows = keyed
-      .select("term", "shard", "salt", "docId", "tf", "positions", "weight")
-      .as[(String, Int, Int, Long, Int, Array[Int], Int)]
-      .mapPartitions { sorted =>
-        val partId = org.apache.spark.TaskContext.getPartitionId()
-        val t0 = System.nanoTime()
-        var nTerms = 0L; var nPostings = 0L; var nBytes = 0L
-        val it = sorted.buffered
-        val runs = new Iterator[SegmentRow] {
-          def hasNext: Boolean = it.hasNext
-          def next(): SegmentRow = {
-            val head = it.head
-            val term = head._1; val shard = head._2; val salt = head._3
-            val run = new Iterator[Posting] {
-              def hasNext: Boolean = it.hasNext && {
-                val h = it.head
-                h._3 == salt && h._2 == shard && h._1 == term
-              }
-              def next(): Posting = { val r = it.next(); Posting(r._4, r._5, r._6, r._7) }
-            }
-            val (blocks, df, cf) = PostingCodec.encode(run, withPos, withW)
-            val rows = blocks.map(b => BlockRow(b.firstDoc, b.lastDoc, b.n, b.maxTf, b.data))
-            nTerms += 1; nPostings += df
-            nBytes += rows.map(_.data.length.toLong).sum
-            SegmentRow(shard, term, salt, df, cf, rows)
-          }
-        }
-        runs ++ {
-          metricsAcc.add((partId, nTerms, nPostings, nBytes, (System.nanoTime() - t0) / 1000000L))
-          Iterator.empty
+    /** The segment rows of one partition whose elements come in (shard,
+      * docId) order: each shard's elements go to a [[ShardInverter]]
+      * through `add`, and the shard's rows leave before the next shard's
+      * elements are read. The partition's lineage row is added once the
+      * rows are exhausted (empty partitions included).
+      */
+    def rows[A](sorted: Iterator[A])(shardOf: A => Int)(add: (ShardInverter, A) => Unit): Iterator[SegmentRow] = {
+      val partId = org.apache.spark.TaskContext.getPartitionId()
+      val t0 = System.nanoTime()
+      var nTerms = 0L; var nPostings = 0L; var nBytes = 0L
+      val inverter = new ShardInverter(cfg.withPositions, cfg.withWeights, hotTerms.value, cfg.nSalts)
+      val in = sorted.buffered
+      val shards = new Iterator[Iterator[SegmentRow]] {
+        def hasNext: Boolean = in.hasNext
+        def next(): Iterator[SegmentRow] = {
+          val shard = shardOf(in.head)
+          while (in.hasNext && shardOf(in.head) == shard) add(inverter, in.next())
+          inverter.drain(shard)
         }
       }
-    segRows.toDF()
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/segments")
-
-    // lineage metrics (driver-side tiny write; dedupe retried tasks)
-    import scala.jdk.CollectionConverters._
-    val metricRows = metricsAcc.value.asScala.toSeq.groupBy(_._1).map(_._2.head).toSeq
-    spark.createDataset(metricRows)
-      .toDF("partitionId", "terms", "postings", "bytes", "elapsedMs")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/metrics")
+      shards.flatten.map { r =>
+        nTerms += 1; nPostings += r.df
+        nBytes += r.blocks.map(_.data.length.toLong).sum
+        r
+      } ++ {
+        lineage.add((partId, nTerms, nPostings, nBytes, (System.nanoTime() - t0) / 1000000L))
+        Iterator.empty
+      }
+    }
   }
 
   /** Deterministic dense docId assignment = global sort rank over the natural

@@ -26,11 +26,10 @@ class IndexReader(val spark: SparkSession, val dir: String) extends Serializable
     spark.read.parquet(s"$dir/segments").as[SegmentRow]
   }
 
-  /** Segment rows for the given terms only. The segments table is written
-    * term-major (range-partitioned + sorted by term), so the `isin`
-    * predicate pushes down to the parquet scan and row-group min/max stats
-    * prune everything but the files/row-groups actually holding the query's
-    * terms — the scan cost is O(matching postings), not O(index).
+  /** Segment rows for the given terms only. The `isin` predicate pushes
+    * down to the parquet scan; each file holds whole shards, its rows
+    * sorted by term within each shard, so the term min/max stats of a row
+    * group or an in-memory batch prune only within a shard's run of rows.
     */
   def segmentsFor(terms: Seq[String]): Dataset[SegmentRow] = {
     import spark.implicits._
